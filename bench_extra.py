@@ -1,9 +1,9 @@
-"""Per-query isolation bench (round 6 optimization work).
+"""Per-query isolation bench.
 
-bench.py is FROZEN for measurement (driver contract); this sidecar
-times individual declared queries through the same noop-sink
-methodology (guide §1.4) and captures .explain("formatted") plans so
-before/after evidence can be committed under plans/r06/.
+Times individual declared queries through bench.py's noop-sink method
+in a ``get_spark()`` session sized from the host, and captures
+.explain("formatted") plans so before/after evidence can be committed
+under plans/.
 
 Usage:
   python bench_extra.py [-n N] [--sf-dir DIR] [--plans DIR] [--tag TAG] q1 q2 ...
@@ -19,12 +19,12 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 import bench as benchmod
+from geotiff_processor_spark.session import get_spark
 
 
 def main() -> None:
@@ -38,12 +38,10 @@ def main() -> None:
     ap.add_argument("--plans", default=None,
                     help="directory to write <query>_<tag>.txt explain dumps")
     ap.add_argument("--tag", default="before")
-    ap.add_argument("--cpus",
-                    default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     args = ap.parse_args()
 
     names = benchmod.HEADLINE if args.all else args.names
-    spark = benchmod._session(f"local[{args.cpus}]")
+    spark = get_spark("bench_extra")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
 
@@ -59,11 +57,8 @@ def main() -> None:
             with open(os.path.join(args.plans,
                                    f"{name}_{args.tag}.txt"), "w") as f:
                 f.write(plan)
-        samples = []
-        for _ in range(args.n):
-            t0 = time.perf_counter()
-            benchmod._force(fn(spark, args.sf_dir))
-            samples.append(round(time.perf_counter() - t0, 3))
+        samples = [round(benchmod._seconds(lambda: fn(spark, args.sf_dir)), 3)
+                   for _ in range(args.n)]
         out[name] = min(samples)
         print(f"{name:28s} {min(samples):8.3f}  {samples}", flush=True)
         spark.sparkContext.setJobDescription(None)

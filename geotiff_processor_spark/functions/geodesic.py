@@ -1,10 +1,5 @@
 """Geodesic (great-circle) distance helpers.
 
-Kept OUT of ``geo.py`` deliberately: ``bench._code_hash()`` fingerprints
-``geo.py`` whole-file as part of the flagship scaling-evidence key, and
-these helpers are not on the flagship path — placing them here keeps
-the pooled scaling-attempt ledger valid.
-
 Argument order follows ``geo.sql_dist2_mdeg``: longitude first, then
 latitude, for both points — haversine is NOT symmetric under a lat/lon
 transposition (the cos(lat) term), so a single module-wide convention

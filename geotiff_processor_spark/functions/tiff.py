@@ -164,6 +164,9 @@ def lzw_decode(data: bytes, expected: int) -> bytes:
     per-code closure call — the previous ``read()``-per-code form was
     ~130 calls/decode and dominated decode_geotiff's worker profile.
     """
+    if expected == 0:
+        # a zero-byte strip: the first code would already overshoot
+        return b""
     out = bytearray()
     table = _LZW_BASE[:]
     tlen = _LZW_FIRST

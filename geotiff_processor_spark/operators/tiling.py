@@ -62,3 +62,20 @@ def tile_pyramid_counts(tile_counts_df: DataFrame,
         zoom -= 1
         out[zoom] = cur
     return out
+
+
+def flagship_pipeline(pages: DataFrame, zoom: int = 6) -> DataFrame:
+    """The flagship chain: geocode -> broadcast PIP join -> XYZ tile
+    assign -> pages and text bytes per (polygon, zone, tile). The bench,
+    the ``spark-submit`` entry script and the plan tests all run this one
+    definition; its only shuffle carries map-side partial aggregates."""
+    from ..sources import synth
+    from . import pip
+    asg = pip.pip_join(synth.geocode(pages),
+                       pip.build_cover_table(pages.sparkSession))
+    return (
+        assign_tiles(asg, zoom)
+        .groupBy("polygon_id", "zone", "tile_x", "tile_y")
+        .agg(F.count(F.lit(1)).alias("n_pages"),
+             F.sum(F.length("text")).alias("n_bytes"))
+    )

@@ -91,10 +91,11 @@ def flagship_stream(spark: SparkSession, input_dir: str,
     static bounded table, so no stream-stream state grows); the only
     stateful operator is the watermarked window count, whose state is
     bounded by (windows in flight) x (polygon, tile) keys. That makes
-    this the same plan shape the batch flagship runs (bench.py
-    flagship_pipeline), executed incrementally with late-data
-    discipline — the streaming analog of the reference's per-file loop
-    with its processed-registry (process.py:100-241, helpers.py:166-183).
+    this the same plan shape the batch flagship runs
+    (``operators.tiling.flagship_pipeline``), executed incrementally
+    with late-data discipline — the streaming analog of the reference's
+    per-file loop with its processed-registry (process.py:100-241,
+    helpers.py:166-183).
     """
     from ..functions.geo import sql_tile_x, sql_tile_y
     from ..operators import pip

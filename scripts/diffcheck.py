@@ -13,7 +13,7 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # data-derived oracle literals (IVF centroids) must come from the SAME
 # sf_dir the queries run at — the driver always checks at sf0.01 (the
@@ -31,7 +31,7 @@ import __spark_entry__ as entrymod  # noqa: E402
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("diffcheck", master="local[8]")
+    spark = get_spark("diffcheck")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

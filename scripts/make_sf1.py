@@ -46,7 +46,7 @@ COPY = ["region", "nation", "customer", "supplier", "part"]
 def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     dst = sys.argv[2] if len(sys.argv) > 2 else "/tmp/testdata_sf1"
-    spark = get_spark("make_sf1", master="local[32]")
+    spark = get_spark("make_sf1")
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(dst, exist_ok=True)
     for t, keys in SHIFT_KEYS.items():

@@ -8,36 +8,25 @@ no cluster-side installs:
         --py-files /tmp/gps.zip \
         scripts/submit_flagship.py <pages_parquet_path> <output_path>
 
-This script only declares the logical plan (geocode -> cell encode ->
-broadcast PIP join -> XYZ tile assign -> zonal aggregate) and writes
-the result; the session and its sizing come from spark-submit confs,
-and executors import the engine from the shipped zip.
+This script only declares the logical plan
+(``operators.tiling.flagship_pipeline``: geocode -> broadcast PIP join
+-> XYZ tile assign -> zonal aggregate) and writes the result; the
+session and its sizing come from spark-submit confs, and executors
+import the engine from the shipped zip.
 """
 
 import sys
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 
 def main() -> None:
     pages_path, out_path = sys.argv[1], sys.argv[2]
     spark = SparkSession.builder.appName("gps-flagship").getOrCreate()
 
-    from geotiff_processor_spark.functions.geo import sql_tile_x, sql_tile_y
-    from geotiff_processor_spark.operators import pip
-    from geotiff_processor_spark.sources import synth
+    from geotiff_processor_spark.operators.tiling import flagship_pipeline
 
-    pages = spark.read.parquet(pages_path)
-    g = synth.geocode(pages)
-    asg = pip.pip_join(g, pip.build_cover_table(spark))
-    result = (
-        asg.withColumn("tile_x", F.expr(sql_tile_x("lonm", 6)))
-        .withColumn("tile_y", F.expr(sql_tile_y("lat", 6)))
-        .groupBy("polygon_id", "zone", "tile_x", "tile_y")
-        .agg(F.count(F.lit(1)).alias("n_pages"),
-             F.sum(F.length("text")).alias("n_bytes"))
-    )
+    result = flagship_pipeline(spark.read.parquet(pages_path))
     result.write.mode("overwrite").parquet(out_path)
     spark.stop()
 

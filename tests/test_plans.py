@@ -6,10 +6,8 @@ import re
 
 from pyspark.sql import functions as F
 
-from geotiff_processor_spark.operators import dedup, pip
+from geotiff_processor_spark.operators import dedup, pip, tiling
 from geotiff_processor_spark.sources import synth
-
-import bench
 
 
 def _plan(df) -> str:
@@ -38,7 +36,7 @@ def test_flagship_single_shuffle_and_pruned_scan(spark, sf_dir):
     """The flagship's ONLY shuffle carries pre-aggregated rows; the
     parquet scan decodes just the text column."""
     pages = _staged_pages(spark, sf_dir)
-    job = bench.flagship_pipeline(spark, pages)
+    job = tiling.flagship_pipeline(pages)
     plan = _plan(job)
     assert len(_exchanges(plan)) == 1, plan[:2000]
     assert "BroadcastHashJoin" in plan
@@ -64,7 +62,6 @@ def test_tile_pyramid_levels_derive_from_child_level(spark, sf_dir):
     """Zoom z-1 aggregates zoom z's counts (4 rows in per row out) —
     each level adds ONE shuffle over shrinking data; no level rescans
     the pages table with a fresh wide aggregation."""
-    from geotiff_processor_spark.operators import tiling
     g = synth.geocode(_staged_pages(spark, sf_dir))
     base = tiling.tile_counts(g, zoom=6)
     levels = tiling.tile_pyramid_counts(base, down_to_zoom=4)
