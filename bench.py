@@ -14,6 +14,7 @@ Headline: after one untimed warm pass over the HEADLINE queries, each
 runs twice in the same ``get_spark()`` session, written to the noop sink
 so every column is evaluated; the faster run counts. A run's time
 includes building its DataFrame, where iterative queries run jobs.
+steal_frac_headline covers the timed runs, not the warm pass.
 
 Flagship: ``operators.tiling.flagship_pipeline`` over the sf pages table
 replicated SPARK_GRAFT_BENCH_REPL times, materialized once as parquet
@@ -106,16 +107,18 @@ def _steal_window(fn):
     return out, (s1 - s0) / max(t1 - t0, 1)
 
 
-def run_headline(spark, sf_dir: str) -> dict[str, float]:
+def run_headline(spark, sf_dir: str) -> tuple[dict[str, float], float]:
+    """({query: seconds}, steal fraction during the timed runs)."""
     qs = entrymod.queries()
     # one untimed pass first: in a fresh session the first ~20 queries
     # ran up to 2.5x slower in both of their runs than after a pass over
     # the list, so a query's time depended on its place in the list
     for name in HEADLINE:
         _force(qs[name](spark, sf_dir))
-    return {name: round(min(_seconds(lambda: qs[name](spark, sf_dir))
-                            for _ in range(2)), 3)
-            for name in HEADLINE}
+    return _steal_window(lambda: {
+        name: round(min(_seconds(lambda: qs[name](spark, sf_dir))
+                        for _ in range(2)), 3)
+        for name in HEADLINE})
 
 
 def materialize_pages(spark, sf_dir: str, repl: int, path: str) -> None:
@@ -169,7 +172,7 @@ def main() -> None:
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    times, steal_headline = _steal_window(lambda: run_headline(spark, sf_dir))
+    times, steal_headline = run_headline(spark, sf_dir)
     pages_path = f"/tmp/bench_pages_sf{sf}_x{repl}.parquet"
     if not os.path.exists(os.path.join(pages_path, "_SUCCESS")):
         materialize_pages(spark, sf_dir, repl, pages_path)

@@ -64,8 +64,8 @@ def tile_pyramid_counts(tile_counts_df: DataFrame,
     return out
 
 
-def flagship_pipeline(pages: DataFrame, zoom: int = 6) -> DataFrame:
-    """The flagship chain: geocode -> broadcast PIP join -> XYZ tile
+def flagship_pipeline(pages: DataFrame) -> DataFrame:
+    """The flagship chain: geocode -> broadcast PIP join -> z6 XYZ tile
     assign -> pages and text bytes per (polygon, zone, tile). The bench,
     the ``spark-submit`` entry script and the plan tests all run this one
     definition; its only shuffle carries map-side partial aggregates."""
@@ -74,7 +74,7 @@ def flagship_pipeline(pages: DataFrame, zoom: int = 6) -> DataFrame:
     asg = pip.pip_join(synth.geocode(pages),
                        pip.build_cover_table(pages.sparkSession))
     return (
-        assign_tiles(asg, zoom)
+        assign_tiles(asg, 6)
         .groupBy("polygon_id", "zone", "tile_x", "tile_y")
         .agg(F.count(F.lit(1)).alias("n_pages"),
              F.sum(F.length("text")).alias("n_bytes"))
