@@ -188,7 +188,10 @@ def q_edit_distance(spark, sf_dir):
     the source-partitioned window and burned the whole DP cost in
     n_sources (=20) tasks. The explicit partition count keeps AQE's
     byte-based coalescing from folding a CPU-bound stage into one
-    task; it derives from cores/shuffle conf, never a constant."""
+    task; it derives from cores/shuffle conf, never a constant.
+
+    Precondition: ``doc_id`` is unique in documents. The text joins on
+    ``doc_id`` and ``_nxt_id`` fan out one row per repeat of a key."""
     from pyspark.sql import Window as W
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -3141,49 +3144,27 @@ SELECT doc_id, source, cast(strat_u as bigint) AS strat_u
 FROM u LEFT JOIN rates USING (source)
 WHERE strat_u < coalesce(keep_per_10k, 10000)"""
     # near-dup clustering: the engine runs the REAL pipeline (MinHash ->
-    # LSH -> Jaccard >= .999 -> label propagation); the oracle derives
-    # the same clusters from the planted-clone construction (verbatim
-    # copies are the only >= .999 pairs — the ngram_jaccard oracle
-    # already proves that equivalence) and resolves components with the
-    # same recursive-CTE min-label propagation as outline_components
+    # LSH -> Jaccard >= .999 -> connected components); the oracle
+    # derives the clusters from the data: at this threshold a pair
+    # verifies exactly when the two texts are identical (planted clones
+    # and organic repeats alike), so a cluster is one distinct text and
+    # its canonical doc the minimum doc_id carrying it
     sql["dedup_canonical"] = """
-WITH RECURSIVE base AS (SELECT doc_id FROM documents),
-corpus AS (
-  SELECT doc_id FROM base
-  UNION ALL SELECT doc_id + 100000 FROM base WHERE doc_id % 20 = 0
-  UNION ALL SELECT doc_id + 200000 FROM base WHERE doc_id % 40 = 0
+WITH corpus AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id % 20 = 0
+  UNION ALL SELECT doc_id + 200000, text FROM documents WHERE doc_id % 40 = 0
 ),
-pairs AS (
-  SELECT doc_id AS key_a, doc_id + 100000 AS key_b FROM base
-    WHERE doc_id % 20 = 0
-  UNION ALL SELECT doc_id, doc_id + 200000 FROM base WHERE doc_id % 40 = 0
-  UNION ALL SELECT doc_id + 100000, doc_id + 200000 FROM base
-    WHERE doc_id % 40 = 0
-),
-edges AS (
-  SELECT key_a AS src, key_b AS dst FROM pairs
-  UNION SELECT key_b, key_a FROM pairs
-),
-cc AS (
-  SELECT src AS node, src AS lbl FROM edges
-  UNION
-  SELECT e.dst AS node, c.lbl FROM cc c
-    JOIN edges e ON c.node = e.src WHERE c.lbl < e.dst
-),
-lab AS (SELECT node, min(lbl) AS component FROM cc GROUP BY 1),
 canon AS (
-  SELECT c.doc_id,
-    cast(coalesce(l.component, c.doc_id) as bigint) AS canonical_id
-  FROM corpus c LEFT JOIN lab l ON c.doc_id = l.node
-),
-sizes AS (
-  SELECT canonical_id, count(*) AS cluster_size FROM canon GROUP BY 1
+  SELECT doc_id,
+    cast(min(doc_id) OVER (PARTITION BY text) as bigint) AS canonical_id,
+    count(*) OVER (PARTITION BY text) AS cluster_size
+  FROM corpus
 )
-SELECT c.doc_id, c.canonical_id,
-  cast(s.cluster_size as bigint) AS cluster_size,
-  cast(case when c.doc_id = c.canonical_id then 1 else 0 end as int)
-    AS kept
-FROM canon c JOIN sizes s USING (canonical_id)"""
+SELECT doc_id, canonical_id,
+  cast(cluster_size as bigint) AS cluster_size,
+  cast(case when doc_id = canonical_id then 1 else 0 end as int) AS kept
+FROM canon"""
     from geotiff_processor_spark.operators.sessions import sql_sessionize
     sql["sessionize"] = sql_sessionize()
     # decontamination: same gram construction as repetition_signals

@@ -8,7 +8,8 @@
 - MinHash + LSH banding: shingle -> per-permutation min-hash -> band
   signature -> bucket-join. All native expressions (explode + min
   aggregates over md5-derived 60-bit integers); candidate pairs verified
-  with exact Jaccard. No Python in the hot path.
+  with exact Jaccard. No Python in the hot path. Verified pairs
+  collapse to clusters through graph.connected_components.
 - SimHash: 16-bit sign-sum fingerprint over token hashes.
 
 Hashes are md5-based so the DuckDB oracle can reproduce them verbatim.
@@ -19,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from geotiff_processor_spark.operators import graph
 from geotiff_processor_spark.operators.par import spread
 
 N_MINHASH = 16
@@ -209,71 +211,13 @@ def jaccard_verify(docs: DataFrame, pairs: DataFrame,
     return out
 
 
-def connected_components(pairs: DataFrame, key_a: str = "key_a",
-                         key_b: str = "key_b",
-                         max_iter: int = 25) -> DataFrame:
-    """(node, component) for every node in `pairs`; component = the
-    minimum node id reachable from it.
-
-    Iterative min-label propagation over the undirected pair graph:
-    every round each node takes the min label across its closed
-    neighborhood; converges in O(graph diameter) rounds. Near-dup
-    graphs are LSH quasi-cliques with tiny diameters, so rounds stay in
-    single digits at any corpus size; each round is one shuffle keyed
-    on node id carrying (id, label) bigint pairs — never document text.
-    ``localCheckpoint`` truncates the growing lineage each round; the
-    convergence probe is a limit(1) existence check, not a full count.
-    """
-    # materialize the edge list ONCE: `pairs` usually carries an
-    # expensive lineage (MinHash -> LSH -> Jaccard), and every
-    # iteration's two actions would otherwise recompute it from scratch
-    # (measured: 12.6s -> ~4s on the sf0.1 dedup_canonical bench)
-    # both directions from ONE pass over pairs (the union-of-two-
-    # selects form computed the pair lineage twice, round 6)
-    edges = pairs.select(F.explode(F.array(
-        F.struct(F.col(key_a).alias("src"), F.col(key_b).alias("dst")),
-        F.struct(F.col(key_b).alias("src"), F.col(key_a).alias("dst")),
-    )).alias("_e")).select("_e.src", "_e.dst").localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("node")).distinct()
-        .withColumn("lbl", F.col("node"))
-    )
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(labels.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"), "lbl",
-                    F.lit(0).alias("own"))
-        )
-        # the node's own row is tagged so the SAME groupBy that takes
-        # the neighborhood min also recovers the previous label
-        # (exactly one own=1 row per node) — the convergence probe
-        # then reads a changed-flag off the checkpoint instead of
-        # shuffle-joining two checkpoints every round (each probe
-        # barrier pays the cluster's slowest-task tail; measured 5.2s
-        # -> 26s on this bench under host contention)
-        new_labels = (
-            labels.select("node", "lbl", F.lit(1).alias("own"))
-            .union(neigh)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"),
-                 F.max(F.when(F.col("own") == 1, F.col("lbl")))
-                 .alias("old_lbl"))
-            .select("node", "lbl",
-                    (F.col("lbl") < F.col("old_lbl")).alias("chg"))
-        ).localCheckpoint(eager=True)
-        changed = new_labels.filter("chg").limit(1).count()
-        labels = new_labels.select("node", "lbl")
-        if changed == 0:
-            break
-    return labels.select("node", F.col("lbl").alias("component"))
-
-
 def canonical_docs(docs: DataFrame, pairs: DataFrame,
                    key_col: str = "doc_id") -> DataFrame:
     """Collapse near-dup pairs into clusters and pick a canonical doc.
 
     (key, canonical_id, cluster_size, kept): canonical = min key in the
-    connected component (docs in no pair are their own canonical,
+    connected component (``graph.connected_components`` over the
+    (key_a, key_b) pairs; docs in no pair are their own canonical,
     cluster_size 1). ``kept=1`` marks the one surviving doc per
     cluster — filtering on it IS the dedup'd corpus. The component
     labels are a tiny fraction of the corpus (only docs in pairs);
@@ -281,7 +225,9 @@ def canonical_docs(docs: DataFrame, pairs: DataFrame,
     practice, expressed as a plain left join so Catalyst/AQE picks the
     strategy from runtime stats.
     """
-    cc = connected_components(pairs).withColumnRenamed("node", key_col)
+    cc = graph.connected_components(
+        pairs.select(F.col("key_a").alias("src"), F.col("key_b").alias("dst"))
+    ).withColumnRenamed("node", key_col)
     with_canon = (
         docs.select(key_col)
         .join(cc, key_col, "left")

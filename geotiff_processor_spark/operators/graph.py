@@ -1,4 +1,4 @@
-"""Link-graph centrality (PageRank) for crawl-quality filtering.
+"""Link-graph operators: PageRank and connected components.
 
 Web-corpus pipelines filter and weight pages by link-graph centrality
 (e.g. Common Crawl publishes harmonic-centrality/PageRank host ranks;
@@ -24,12 +24,22 @@ nodes are handled by the standard redistribute-to-all term when
 
 Reference analog: none (the reference is a raster pipeline); this
 belongs to the training-data family the engine adds for web corpora.
+
+``connected_components`` is the package's one components helper: near-dup
+clustering (dedup.canonical_docs) and the tile-border merge of the tiled
+polygonize (outline.cell_outlines) both call it, and ``union_find`` is
+its driver-side kernel, shared with outline's per-tile pass.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+_LOG = logging.getLogger(__name__)
 
 # deterministic synthetic link graph: page i links to (i*a+b) % n for
 # each (a, b) — 3-out-regular, no dangling nodes, SQL-reproducible
@@ -121,3 +131,92 @@ def sql_pagerank(n: int, iters: int = 5, d: float = 0.85) -> str:
         )
     return ("WITH " + ",\n".join(parts)
             + f"\nSELECT id AS page_id, round(r, 6) AS rank FROM r{iters}")
+
+
+def union_find(pairs, nodes=()) -> dict:
+    """{node: min node of its set} over the undirected ``pairs``, plus
+    every node in ``nodes`` (isolated ones map to themselves). Nodes
+    must be hashable and mutually comparable; the smaller root wins
+    each union, so every root is its set's minimum."""
+    parent = {n: n for n in nodes}
+
+    def find(a):
+        while parent[a] != a:
+            parent[a] = parent[parent[a]]
+            a = parent[a]
+        return a
+
+    for a, b in pairs:
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def connected_components(edges: DataFrame, keys=(),
+                         collect_limit: int = 200_000) -> DataFrame:
+    """(keys..., node, component) for every node of the undirected
+    ``(keys..., src, dst)`` edge list; component = the minimum node id
+    of its component within the same ``keys`` (edges never cross keys).
+
+    The edge list is checkpointed once and at most ``collect_limit + 1``
+    edges are taken from the checkpoint. At or below the limit one
+    ``union_find`` on the driver labels them and the result is a small
+    local table, hinted for broadcast (its source is a parallelized
+    list, whose size the planner cannot see). Past it the graph may not fit the driver, so the labels
+    are found in Spark from the same checkpoint: min-label propagation
+    with pointer jumping, O(log n) rounds (each round halves the depth
+    of the representative trees), each round one (keys, node, label)
+    shuffle that is checkpointed so the plan stays flat. Raises rather
+    than return a partial labelling after 64 rounds.
+    """
+    keys = list(keys)
+    ck = edges.select(*keys, F.col("src").cast("bigint"),
+                      F.col("dst").cast("bigint")).localCheckpoint()
+    head = ck.limit(collect_limit + 1).collect()
+    if len(head) <= collect_limit:
+        _LOG.info("connected_components: %d edges (driver union-find)",
+                  len(head))
+        nk = len(keys)
+        roots = union_find(
+            (tuple(r[:nk + 1]), (*r[:nk], r[nk + 1])) for r in head)
+        schema = StructType(
+            [ck.schema[k] for k in keys]
+            + [StructField("node", LongType()),
+               StructField("component", LongType())])
+        return F.broadcast(ck.sparkSession.createDataFrame(
+            [(*n, c[-1]) for n, c in roots.items()], schema))
+
+    _LOG.info("connected_components: > %d edges (in-Spark label "
+              "propagation)", collect_limit)
+    sym = ck.unionByName(ck.select(*keys, F.col("dst").alias("src"),
+                                   F.col("src").alias("dst"))
+                         ).distinct().localCheckpoint()
+    labels = (sym.select(*keys, F.col("src").alias("node")).distinct()
+              .withColumn("lbl", F.col("node")).localCheckpoint())
+    for _ in range(64):
+        nbr_min = (
+            sym.join(labels.select(*keys, F.col("node").alias("dst"),
+                                   F.col("lbl").alias("dlbl")),
+                     [*keys, "dst"])
+            .groupBy(*keys, "src").agg(F.min("dlbl").alias("nlbl"))
+            .withColumnRenamed("src", "node"))
+        stepped = (
+            labels.join(nbr_min, [*keys, "node"], "left")
+            .select(*keys, "node", F.col("lbl").alias("olbl"),
+                    F.least("lbl", F.coalesce("nlbl", "lbl")).alias("lbl")))
+        # pointer jump: lbl <- lbl(lbl) (every label value is itself a
+        # node, so the labels double as the representative table). The
+        # previous label rides along as olbl, so convergence reads a
+        # changed-flag off the new checkpoint (labels only decrease)
+        reps = stepped.select(*keys, F.col("node").alias("lbl"),
+                              F.col("lbl").alias("plbl"))
+        new_labels = (
+            stepped.join(reps, [*keys, "lbl"])
+            .select(*keys, "node", F.col("plbl").alias("lbl"),
+                    (F.col("plbl") < F.col("olbl")).alias("chg"))
+        ).localCheckpoint()
+        labels = new_labels.select(*keys, "node", "lbl")
+        if new_labels.filter("chg").limit(1).count() == 0:
+            return labels.withColumnRenamed("lbl", "component")
+    raise RuntimeError("label propagation did not converge in 64 rounds")

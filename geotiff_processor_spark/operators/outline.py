@@ -19,13 +19,14 @@ Two physical plans over identical semantics:
   by the number of groups (the single-threaded tail at scale).
 - ``cell_outlines`` (default): SURVEY §7 hard-part (a) — cells are
   partitioned into coarse tiles, each tile polygonizes locally in
-  parallel, tile-crossing components are merged by union-find on the
-  tiny border-adjacency graph (driver-side: nodes = local components,
-  edges = occupied cell pairs straddling a tile edge), then each GLOBAL
-  component traces its rings in its own task. Parallelism = number of
-  tiles for the local pass and number of components for the trace pass
-  — both >> number of groups. Differential-tested identical to the
-  grouped plan.
+  parallel, tile-crossing components are merged by
+  ``graph.connected_components`` on the tiny border-adjacency graph
+  (nodes = local components, edges = occupied cell pairs straddling a
+  tile edge; driver union-find below its collect limit, in-Spark label
+  propagation above it), then each GLOBAL component traces its rings
+  in its own task. Parallelism = number of tiles for the local pass
+  and number of components for the trace pass — both >> number of
+  groups. Differential-tested identical to the grouped plan.
 
 The shuffles carry only (group, cell) pairs — cells are pre-dedup'd, so
 every stage is bounded by the number of distinct occupied cells, not
@@ -36,14 +37,13 @@ downsample, process.py:172-182).
 from __future__ import annotations
 
 import json
-import logging
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_LOG = logging.getLogger(__name__)
+from geotiff_processor_spark.operators import graph
 
 OUTLINE_SCHEMA = ("grp string, component_id bigint, n_cells bigint,"
                   " ring_geojson string,"
@@ -52,27 +52,15 @@ OUTLINE_COLS = ["grp", "component_id", "n_cells", "ring_geojson",
                 "min_x", "min_y", "max_x", "max_y"]
 
 
-def _connected_components(cells: np.ndarray) -> dict[tuple[int, int], int]:
-    """4-neighbor union-find over (x, y) integer cells."""
+def _connected_components(
+        cells: np.ndarray) -> dict[tuple[int, int], tuple[int, int]]:
+    """4-neighbor components of (x, y) integer cells: {cell: root}, the
+    root being the component's smallest cell (graph.union_find)."""
     cellset = {(int(x), int(y)) for x, y in cells}
-    parent = {c: c for c in cellset}
-
-    def find(a):
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-
-    for (x, y) in cellset:
-        for nb in ((x + 1, y), (x, y + 1)):
-            if nb in cellset:
-                union((x, y), nb)
-    return {c: find(c) for c in cellset}
+    return graph.union_find(
+        (((x, y), nb) for (x, y) in cellset
+         for nb in ((x + 1, y), (x, y + 1)) if nb in cellset),
+        cellset)
 
 
 def _boundary_rings(comp: set[tuple[int, int]]) -> list[list[tuple[int, int]]]:
@@ -225,42 +213,6 @@ def cell_outlines_grouped(geocoded: DataFrame, group_col: str = "lang",
         polygonize, schema=OUTLINE_SCHEMA)
 
 
-def _merge_edges_driver(spark, labeled: DataFrame,
-                        edge_rows: list) -> DataFrame:
-    """Union-find over edge-CONNECTED local components only; components
-    confined to one tile never appear in an edge and fall back to a
-    packed per-node gid in the caller (saves a collect-all-nodes job)."""
-    parent: dict[tuple, tuple] = {}
-
-    def find(a):
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    for r in edge_rows:
-        a = (r["grp"], r["atx"], r["aty"], r["alid"])
-        b = (r["grp"], r["btx"], r["bty"], r["blid"])
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    gid_of = {}
-    roots = {}
-    for n in parent:
-        root = find(n)
-        gid_of[n] = roots.setdefault(root, len(roots))
-    if gid_of:
-        mapping = spark.createDataFrame(
-            [(g, tx, ty, lid, gid)
-             for (g, tx, ty, lid), gid in gid_of.items()],
-            schema=["grp", "tx", "ty", "lid", "gid"])
-        return labeled.join(F.broadcast(mapping),
-                            ["grp", "tx", "ty", "lid"], "left")
-    return labeled.withColumn("gid", F.lit(None).cast("bigint"))
-
-
 def _sql_pack_node(tx: str, ty: str, lid: str) -> str:
     """Pack a per-group local-component node (tx, ty, lid) into one
     bigint — tx/ty/lid are all < 2^20 by far (tile counts per axis =
@@ -269,71 +221,25 @@ def _sql_pack_node(tx: str, ty: str, lid: str) -> str:
     return f"({tx} * {1 << 40} + {ty} * {1 << 20} + {lid})"
 
 
-def _merge_edges_spark(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
-    """Distributed border-graph merge: min-label propagation with
-    pointer jumping over the (grp, packed-node) edge list.
-
-    Converges in O(log n) rounds (each round halves representative-tree
-    depth), so 64 rounds bounds any physically realizable graph; raises
-    rather than returning a partial merge if the bound is ever hit.
-    Every intermediate is localCheckpoint'ed to keep plan depth flat.
-    Used only past cell_outlines' merge_collect_limit — the scale path
-    where the border graph no longer fits the driver.
-    """
-    a = F.expr(_sql_pack_node("atx", "aty", "alid"))
-    b = F.expr(_sql_pack_node("btx", "bty", "blid"))
-    half = edges.select("grp", a.alias("src"), b.alias("dst"))
-    sym = half.unionByName(
-        half.select("grp", F.col("dst").alias("src"),
-                    F.col("src").alias("dst"))
-    ).distinct().localCheckpoint()
-
-    labels = (sym.select("grp", F.col("src").alias("node")).distinct()
-              .withColumn("lbl", F.col("node")).localCheckpoint())
-    for _ in range(max_rounds):
-        nbr_min = (
-            sym.join(labels.select("grp", F.col("node").alias("dst"),
-                                   F.col("lbl").alias("dlbl")),
-                     ["grp", "dst"])
-            .groupBy("grp", "src").agg(F.min("dlbl").alias("nlbl"))
-            .withColumnRenamed("src", "node"))
-        stepped = (
-            labels.join(nbr_min, ["grp", "node"], "left")
-            .select("grp", "node", F.col("lbl").alias("olbl"),
-                    F.least("lbl", F.coalesce("nlbl", "lbl")).alias("lbl")))
-        # pointer jump: lbl <- lbl(lbl)  (labels double as the rep table
-        # because every label value is itself a node key). The round's
-        # previous label rides along as olbl so convergence reads a
-        # changed-flag off the new checkpoint — no extra shuffle join
-        # of two checkpoints per round (labels only ever decrease, so
-        # changed == lbl < olbl)
-        reps = stepped.select("grp", F.col("node").alias("lbl"),
-                              F.col("lbl").alias("plbl"))
-        jumped = (
-            stepped.join(reps, ["grp", "lbl"])
-            .select("grp", "node", F.col("plbl").alias("lbl"),
-                    (F.col("plbl") < F.col("olbl")).alias("chg")))
-        new_labels = jumped.localCheckpoint()
-        changed = new_labels.filter("chg").limit(1).count()
-        labels = new_labels.select("grp", "node", "lbl")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"border-graph label propagation did not converge in "
-            f"{max_rounds} rounds")
-    # gid = the component's min label (a packed-node bigint): already
-    # unique per (grp, component) and non-negative, so no global
-    # row_number window — downstream only groups by (grp, gid) and
-    # renumbers per group, so dense ids are not needed here, and the
-    # scale path keeps zero single-task stages
+def _border_gids(edges: DataFrame, collect_limit: int) -> DataFrame:
+    """(grp, tx, ty, lid, gid) for every local component on a border
+    edge: graph.connected_components over the packed-node edge list.
+    gid = the component's minimum packed node — unique per grp and
+    non-negative, so no global row_number window is needed (stage B
+    renumbers per group) and the scale path keeps zero single-task
+    stages."""
+    cc = graph.connected_components(
+        edges.select("grp",
+                     F.expr(_sql_pack_node("atx", "aty", "alid")).alias("src"),
+                     F.expr(_sql_pack_node("btx", "bty", "blid")).alias("dst")),
+        keys=["grp"], collect_limit=collect_limit)
     n20 = 1 << 20
-    return labels.select(
+    return cc.select(
         "grp",
         F.expr(f"cast(floor(node / {1 << 40}) as bigint)").alias("tx"),
         F.expr(f"cast(floor(node / {n20}) % {n20} as bigint)").alias("ty"),
         F.expr(f"cast(node % {n20} as bigint)").alias("lid"),
-        F.col("lbl").cast("bigint").alias("gid"))
+        F.col("component").alias("gid"))
 
 
 def cell_outlines(geocoded: DataFrame, group_col: str = "lang",
@@ -343,20 +249,19 @@ def cell_outlines(geocoded: DataFrame, group_col: str = "lang",
     """Tile-partitioned polygonize with cross-tile boundary merge.
 
     Stage A: per (group, 2^tile_shift-sized coarse tile) local
-    union-find — parallelism = occupied tiles. Stage M: union-find on
-    the border-adjacency graph of LOCAL components (nodes = local
-    component labels, edges = occupied 4-neighbor cell pairs straddling
-    a tile edge) — this graph is tiny (border cells only), merged
-    driver-side and rebroadcast while it fits (≤ merge_collect_limit
-    edges, logged), else merged fully in-Spark by label propagation
-    with pointer jumping (_merge_edges_spark) — the graph never has to
-    fit the driver.  This is exactly the SURVEY §7 iterative
-    boundary-merge hard part. Stage B: each GLOBAL component traces its
+    union-find — parallelism = occupied tiles. Stage M:
+    ``graph.connected_components`` over the border-adjacency graph of
+    LOCAL components (nodes = local component labels, edges = occupied
+    4-neighbor cell pairs straddling a tile edge) — this graph is tiny
+    (border cells only), merged by a driver union-find while it has at
+    most ``merge_collect_limit`` edges, else fully in Spark by label
+    propagation with pointer jumping — the graph never has to fit the
+    driver. This is exactly the SURVEY §7 iterative boundary-merge
+    hard part. Stage B: each GLOBAL component traces its
     rings in its own task — parallelism = number of components.
     Component ids are renumbered by smallest cell per group, matching
     ``cell_outlines_grouped`` bit-for-bit.
     """
-    spark = geocoded.sparkSession
     ts = 1 << tile_shift
     cells = occupied_cells(geocoded, group_col, level).withColumn(
         "tx", F.expr(f"cast(floor(cx / {ts}) as bigint)")
@@ -370,12 +275,11 @@ def cell_outlines(geocoded: DataFrame, group_col: str = "lang",
         grp, tx, ty = key
         arr = pdf[["cx", "cy"]].to_numpy(np.int64)
         roots = _connected_components(arr)
-        # stable local ids: rank of each root's smallest member cell
+        # stable local ids: rank of each root (its smallest cell)
         members: dict[tuple[int, int], list] = {}
         for cell, root in roots.items():
             members.setdefault(root, []).append(cell)
-        lid_of = {root: i for i, root in enumerate(
-            sorted(members, key=lambda r: min(members[r])))}
+        lid_of = {root: i for i, root in enumerate(sorted(members))}
         rows = [(grp, tx, ty, lid_of[root], c[0], c[1])
                 for root, cs in members.items() for c in cs]
         return pd.DataFrame(rows, columns=["grp", "tx", "ty", "lid",
@@ -406,26 +310,13 @@ def cell_outlines(geocoded: DataFrame, group_col: str = "lang",
     edges = hits.select(
         "grp", "atx", "aty", "alid", "btx", "bty", "blid").distinct()
 
-    # BOUNDED driver merge: the border graph is normally tiny (edges
-    # only exist for border-straddling local components), but its size
-    # grows with total tile perimeter — on a pathologically fine grid it
-    # can outgrow the driver.  Collect at most merge_collect_limit
-    # edges; past that, fall back to iterative in-Spark label
-    # propagation (_merge_edges_spark) and never materialize the graph
-    # driver-side.
-    head = edges.limit(merge_collect_limit + 1).collect()
-    if len(head) > merge_collect_limit:
-        _LOG.info("cell_outlines border merge: > %d edges — using "
-                  "in-Spark label propagation", merge_collect_limit)
-        mapping = _merge_edges_spark(edges)
-        mapped = labeled.join(F.broadcast(mapping),
-                              ["grp", "tx", "ty", "lid"], "left")
-    else:
-        _LOG.info("cell_outlines border merge: %d edges (driver "
-                  "union-find)", len(head))
-        mapped = _merge_edges_driver(spark, labeled, head)
+    # the border graph is normally tiny, but it grows with total tile
+    # perimeter: past merge_collect_limit edges the helper merges it in
+    # Spark, and its mapping is then joined by size, not broadcast
+    mapped = labeled.join(_border_gids(edges, merge_collect_limit),
+                          ["grp", "tx", "ty", "lid"], "left")
     # isolated local components: unique packed gid, disjoint from the
-    # driver-assigned non-negative ids
+    # non-negative border gids
     merged = mapped.select(
         "grp",
         F.coalesce(

@@ -36,7 +36,7 @@ GOLDEN_QUERIES = {
 
 def main():
     os.makedirs(OUT, exist_ok=True)
-    spark = get_spark("goldens", master="local[8]", driver_memory="8g")
+    spark = get_spark("goldens")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
     for name, spec in GOLDEN_QUERIES.items():
@@ -47,7 +47,10 @@ def main():
         print(name, "->", df.count(), "rows")
 
     # outline.geojson: one FeatureCollection over the lang groups
-    rows = qs["outline_components"](spark, SF_DIR) \
+    # (outline_components projects the rings away, so call the operator)
+    from geotiff_processor_spark.operators import outline as ol
+    rows = ol.cell_outlines(entrymod._geocoded(spark, SF_DIR),
+                            group_col="lang", level=6) \
         .orderBy("grp", "component_id").collect()
     features = [
         {
@@ -65,7 +68,6 @@ def main():
 
     # feature_collection.json: FULL document assembly golden over the
     # donut fixture (outer + hole ring; outlines.py:104-128 parity)
-    from geotiff_processor_spark.operators import outline as ol
     from geotiff_processor_spark.testing import donut_pages_fixture
     o = ol.cell_outlines(donut_pages_fixture(spark), group_col="g", level=6)
     fc = ol.feature_collections(o, gsd=0.2, date="2026-01-01").first()

@@ -34,6 +34,15 @@ def test_all_queries_run_and_nonempty(spark, sf_dir):
         assert df.count() >= 0, name
 
 
+def test_edit_distance_one_row_per_doc(spark, sf_dir):
+    """edit_distance joins text back on doc_id, so with unique doc_ids
+    (its precondition) it returns exactly one row per document."""
+    out = entrymod.queries()["edit_distance"](spark, sf_dir)
+    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    assert out.count() == n_docs
+    assert out.select("doc_id").distinct().count() == n_docs
+
+
 def test_driver_checked_prefix_covers_distinct_operators():
     """The external driver evaluates only the FIRST 50 queries()
     entries (registration order). Guard the prefix composition: every

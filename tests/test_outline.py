@@ -236,7 +236,7 @@ def test_spark_merge_plan_has_no_global_window(spark):
         [("g", 0, 0, 1, 1, 0, 0), ("g", 1, 0, 0, 2, 0, 3)],
         "grp string, atx bigint, aty bigint, alid bigint,"
         " btx bigint, bty bigint, blid bigint")
-    mapping = outline._merge_edges_spark(edges)
+    mapping = outline._border_gids(edges, collect_limit=0)
     plan = mapping._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
     # gids stay unique per grp and non-negative (isolated-component

@@ -6,7 +6,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from geotiff_processor_spark.operators import dedup, pip, tiling
+from geotiff_processor_spark.operators import dedup, graph, pip, tiling
 from geotiff_processor_spark.sources import synth
 
 
@@ -129,9 +129,8 @@ def test_cc_rounds_carry_two_bigints_only(spark):
     round cost is bounded by node count regardless of document width.
     The returned frame is a localCheckpoint scan (lineage truncated —
     itself a scale property: plans don't grow with iteration count)."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3)], "key_a bigint, key_b bigint")
-    cc = dedup.connected_components(pairs, max_iter=1)
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "src bigint, dst bigint")
+    cc = graph.connected_components(pairs, collect_limit=0)
     assert [f.dataType.simpleString() for f in cc.schema.fields] == \
         ["bigint", "bigint"]
     plan = _plan(cc)

@@ -7,7 +7,7 @@ checks on the synthetic documents table.
 import pytest
 from pyspark.sql import functions as F
 
-from geotiff_processor_spark.operators import dedup, textprep
+from geotiff_processor_spark.operators import dedup, graph, textprep
 
 
 def _docs(spark, rows):
@@ -133,20 +133,32 @@ def _pairs(spark, rows):
     return spark.createDataFrame(rows, "key_a bigint, key_b bigint")
 
 
-def test_connected_components_chain(spark):
-    # path graph 1-2-3-4-5-6 (diameter 5): exercises multi-round
-    # propagation, not just one hop
-    cc = dedup.connected_components(
-        _pairs(spark, [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)]))
+def _edges(spark, rows):
+    return spark.createDataFrame(rows, "src bigint, dst bigint")
+
+
+def _chain(n):
+    return [(i, i + 1) for i in range(1, n)]
+
+
+@pytest.mark.parametrize("collect_limit", [200_000, 0])
+@pytest.mark.parametrize("n", [6, 40])
+def test_connected_components_chain(spark, n, collect_limit):
+    # path graph 1-2-...-n (diameter n-1): exercises multi-round
+    # propagation, not just one hop, on the driver and the Spark path
+    cc = graph.connected_components(_edges(spark, _chain(n)),
+                                    collect_limit=collect_limit)
     got = {r.node: r.component for r in cc.collect()}
-    assert got == {i: 1 for i in range(1, 7)}
+    assert got == {i: 1 for i in range(1, n + 1)}
 
 
 def test_connected_components_two_clusters(spark):
-    cc = dedup.connected_components(
-        _pairs(spark, [(10, 20), (20, 30), (100, 200)]))
-    got = {r.node: r.component for r in cc.collect()}
-    assert got == {10: 10, 20: 10, 30: 10, 100: 100, 200: 100}
+    for collect_limit in (200_000, 0):  # driver path, then Spark path
+        cc = graph.connected_components(
+            _edges(spark, [(10, 20), (20, 30), (100, 200)]),
+            collect_limit=collect_limit)
+        got = {r.node: r.component for r in cc.collect()}
+        assert got == {10: 10, 20: 10, 30: 10, 100: 100, 200: 100}
 
 
 def test_canonical_docs_sizes_and_kept(spark):
@@ -161,6 +173,11 @@ def test_canonical_docs_sizes_and_kept(spark):
     assert kept == [1, 7, 9]
     # dedup'd corpus size = number of clusters
     assert len(kept) == len({r.canonical_id for r in out})
+    # a 40-doc chain is one cluster with one kept doc
+    docs = _docs(spark, [(i, f"d{i}") for i in range(1, 41)])
+    out = dedup.canonical_docs(docs, _pairs(spark, _chain(40))).collect()
+    assert {(r.canonical_id, r.cluster_size) for r in out} == {(1, 40)}
+    assert [r.doc_id for r in out if r.kept == 1] == [1]
 
 
 def test_dedup_canonical_end_to_end_planted(spark, sf_dir):
