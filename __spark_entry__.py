@@ -1033,7 +1033,8 @@ def q_minhash_sigs(spark, sf_dir):
 def q_ngram_jaccard(spark, sf_dir):
     """Near-dup detection end-to-end: MinHash -> LSH bucket-join ->
     exact n-gram Jaccard verify, on a corpus with planted near-dups
-    (every 20th doc re-keyed verbatim => jaccard 1.0 pairs)."""
+    (every 20th doc re-keyed verbatim => jaccard 1.0 pairs) and any
+    organic identical-text pairs."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id", "text")
     clones = docs.filter(F.col("doc_id") % 20 == 0) \
@@ -2862,11 +2863,16 @@ SELECT doc_id, {mins} FROM hs GROUP BY doc_id"""
             "FROM bands a JOIN bands b\n"
             "  ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id")
     )
-    sql["ngram_jaccard"] = (
-        "SELECT doc_id AS key_a, doc_id + 100000 AS key_b,"
-        " cast(1.0 as double) AS jaccard"
-        " FROM documents WHERE doc_id % 20 = 0"
-    )
+    # derived from the data, like dedup_canonical below: at Jaccard >=
+    # .999 a pair verifies exactly when the two texts are identical,
+    # planted clones and organic repeats alike
+    sql["ngram_jaccard"] = """
+WITH corpus AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id % 20 = 0
+)
+SELECT a.doc_id AS key_a, b.doc_id AS key_b, cast(1.0 as double) AS jaccard
+FROM corpus a JOIN corpus b ON a.text = b.text AND a.doc_id < b.doc_id"""
     sql["embedding_near_dup"] = (
         "SELECT vec_id AS vid_a, vec_id + 100000 AS vid_b,"
         " cast(1.0 as double) AS cos_sim"

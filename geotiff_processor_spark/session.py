@@ -48,6 +48,12 @@ def get_spark(
     executor, and the other half is left to the Python workers.
     Executors put the package's parent directory on their PYTHONPATH,
     so Python workers import the engine from any working directory.
+    Python workers start through the engine's daemon
+    (:mod:`geotiff_processor_spark.daemon`). Spark's worker invalidates
+    import caches at the start of every task, and on Python < 3.13
+    that re-reads the directory of ``pyspark.zip`` and py4j once per
+    importer, a fixed CPU cost per task larger than a small batch's
+    work; the daemon re-reads an archive only when the file changed.
     """
     cores = host_cores()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
@@ -67,6 +73,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_memory)
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
+        .config("spark.python.daemon.module", "geotiff_processor_spark.daemon")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # resumable checkpoints overwrite only the partitions present in

@@ -75,6 +75,13 @@ def main():
         f.write(fc["feature_collection"])
     print("feature_collection.json ->", fc["grp"])
 
+    # multipolygon_feature.json: the merged one-Feature-per-group document
+    # over the same fixture (outlines.py:79-128 parity)
+    mp = ol.multipolygon_features(o, gsd=0.2, date="2026-01-01").first()
+    with open(os.path.join(OUT, "multipolygon_feature.json"), "w") as f:
+        f.write(mp["feature_json"])
+    print("multipolygon_feature.json ->", mp["grp"])
+
     # quantities.txt: 7 comma-joined break values (quantities.py:14-24)
     row = qs["percentile_breaks"](spark, SF_DIR).first()
     vals = [row[f"break_{i + 1}"] for i in range(7)]

@@ -33,6 +33,9 @@ QUALITY_MAX_DUP_GRAM_FRAC = 0.9
 
 def main() -> None:
     docs_path, out_dir = sys.argv[1], sys.argv[2]
+    # No spark.python.daemon.module here, unlike get_spark: under
+    # spark-submit the package may arrive through --py-files only after
+    # the worker daemon has started, so the stock daemon is kept.
     spark = SparkSession.builder.appName("gps-corpus-pipeline") \
         .getOrCreate()
     run(spark, docs_path, out_dir)

@@ -22,6 +22,9 @@ from pyspark.sql import SparkSession
 
 def main() -> None:
     pages_path, out_path = sys.argv[1], sys.argv[2]
+    # No spark.python.daemon.module here, unlike get_spark: under
+    # spark-submit the package may arrive through --py-files only after
+    # the worker daemon has started, so the stock daemon is kept.
     spark = SparkSession.builder.appName("gps-flagship").getOrCreate()
 
     from geotiff_processor_spark.operators.tiling import flagship_pipeline

@@ -30,6 +30,9 @@ from pyspark.sql import functions as F
 
 def main() -> None:
     pages_path, out_dir = sys.argv[1], sys.argv[2]
+    # No spark.python.daemon.module here, unlike get_spark: under
+    # spark-submit the package may arrive through --py-files only after
+    # the worker daemon has started, so the stock daemon is kept.
     builder = SparkSession.builder.appName("gps-pipeline")
     # plain-python launches (tests, dev boxes) set the master via env;
     # spark-submit runs leave it unset and use the cluster's

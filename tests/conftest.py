@@ -1,9 +1,11 @@
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests belong to, wherever it is
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from geotiff_processor_spark.session import get_spark
 from geotiff_processor_spark.sources.testdata import TABLES

@@ -1,9 +1,5 @@
 """Driver-contract smoke: entry() runs, queries()/oracle_sql() coherent."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import __spark_entry__ as entrymod
 
 

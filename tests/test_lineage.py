@@ -1,9 +1,12 @@
 """Checkpoint/resume + partition metrics (north_rule resumability)."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from geotiff_processor_spark.operators import pip
 from geotiff_processor_spark.plans import lineage
+from geotiff_processor_spark.session import PACKAGE_ROOT
 from geotiff_processor_spark.sources import synth
 
 
@@ -77,7 +80,8 @@ def test_submit_pipeline_end_to_end_and_resume(spark, sf_dir, tmp_path):
     import shutil
 
     spec = importlib.util.spec_from_file_location(
-        "submit_pipeline", "/root/repo/scripts/submit_pipeline.py")
+        "submit_pipeline",
+        os.path.join(PACKAGE_ROOT, "scripts", "submit_pipeline.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
@@ -97,7 +101,6 @@ def test_submit_pipeline_end_to_end_and_resume(spark, sf_dir, tmp_path):
     # mtime so we can prove it is NOT rewritten on resume
     shutil.rmtree(f"{out}/outline")
     shutil.rmtree(f"{out}/outline__done")
-    import os
     # DATA files only: the unconditional (empty) dynamic-overwrite
     # commit may refresh _SUCCESS, but must not rewrite any partition
     sentinel = max(
@@ -143,12 +146,11 @@ def test_corpus_pipeline_end_to_end_and_resume(spark, sf_dir, tmp_path):
     deleted tail stage is rebuilt on rerun while committed stages are
     untouched."""
     import importlib.util
-    import os
     import shutil
 
     spec = importlib.util.spec_from_file_location(
         "submit_corpus_pipeline",
-        "/root/repo/scripts/submit_corpus_pipeline.py")
+        os.path.join(PACKAGE_ROOT, "scripts", "submit_corpus_pipeline.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
@@ -191,7 +193,6 @@ def test_pipeline_kill_restart_mid_pyramid(spark, tmp_path):
     already-committed levels' data files byte-untouched, (b) produce
     zero duplicate rows, and (c) end bit-identical to an uninterrupted
     run. sf0.01 input."""
-    import os
     import subprocess
     import sys as _sys
 
@@ -202,14 +203,15 @@ def test_pipeline_kill_restart_mid_pyramid(spark, tmp_path):
     _synth.build_pages(spark, sf).write.parquet(pages_path)
 
     env = {**os.environ, "GPS_PIPELINE_MASTER": "local[8]",
-           "PYTHONPATH": "/root/repo"}
+           "PYTHONPATH": PACKAGE_ROOT}
 
     def run_sub(out, crash_after_zoom=None):
         e = dict(env)
         if crash_after_zoom is not None:
             e["GPS_PIPELINE_CRASH_AFTER_ZOOM"] = str(crash_after_zoom)
         return subprocess.run(
-            [_sys.executable, "/root/repo/scripts/submit_pipeline.py",
+            [_sys.executable,
+             os.path.join(PACKAGE_ROOT, "scripts", "submit_pipeline.py"),
              pages_path, out],
             env=e, capture_output=True, text=True, timeout=600)
 
