@@ -705,7 +705,7 @@ def q_tile_pyramid(spark, sf_dir):
     """A4 over the tile hierarchy: z6 counts rolled up to z3 (parent =
     sum of 4 children), all levels unioned."""
     base = tiling.tile_counts(_geocoded(spark, sf_dir), zoom=6)
-    levels = tiling.tile_pyramid_counts(base, down_to_zoom=3)
+    levels = tiling.tile_pyramid_counts(base, 6, down_to_zoom=3)
     out = None
     for z in sorted(levels):
         out = levels[z] if out is None else out.unionByName(levels[z])

@@ -62,7 +62,6 @@ class Ellipsoid:
 
 AIRY1830 = Ellipsoid("Airy1830", 6377563.396, 299.3249646)
 WGS84 = Ellipsoid("WGS84", 6378137.0, 298.257223563)
-INTL1924 = Ellipsoid("Intl1924", 6378388.0, 297.0)  # ED50's ellipsoid
 
 
 @dataclass(frozen=True)

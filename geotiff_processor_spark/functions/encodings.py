@@ -24,9 +24,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-NO_DATA = -10000.0  # params.py:25
-MIN_PERCENTILE = 0.5   # params.py:104
-MAX_PERCENTILE = 96.0  # params.py:105
 PALETTE = [  # params.py:108-116
     "#0000bb", "#51dede", "#57ed5a", "#44ec35", "#dfe301", "#ff8602", "#b20006",
 ]

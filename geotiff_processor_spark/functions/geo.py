@@ -73,13 +73,6 @@ def sql_cell_id_from_q(xq: str, yq: str,
     return "concat(" + ", ".join(digits) + ")"
 
 
-def sql_cell_digit(lonm: str, latm: str, level: int) -> str:
-    """Quadkey digit (0-3) at one level: 2*ybit + xbit."""
-    xq = f"cast(floor(({sql_xi(lonm)}) * {1 << level} / {LON_SPAN}) as bigint)"
-    yq = f"cast(floor(({sql_yi(latm)}) * {1 << level} / {LAT_SPAN}) as bigint)"
-    return f"(({xq}) % 2 + 2 * (({yq}) % 2))"
-
-
 def sql_cell_id(lonm: str, latm: str, levels: int = DEFAULT_CELL_LEVEL) -> str:
     """Hierarchical cell id string of `levels` quadkey digits, self
     contained (inlines the quotients; prefer the two-step
@@ -154,15 +147,6 @@ def sql_dist2_mdeg(lonm_a: str, latm_a: str, lonm_b: str, latm_b: str) -> str:
 # ---------------------------------------------------------------------------
 # Spark Column wrappers (native expressions — whole-stage-codegen path)
 # ---------------------------------------------------------------------------
-
-def cell_id(lonm: str = "lonm", latm: str = "latm",
-            levels: int = DEFAULT_CELL_LEVEL) -> Column:
-    return F.expr(sql_cell_id(lonm, latm, levels))
-
-
-def tile_xy(lonm: str, lat: str, zoom: int) -> tuple[Column, Column]:
-    return F.expr(sql_tile_x(lonm, zoom)), F.expr(sql_tile_y(lat, zoom))
-
 
 def mercator_xy(lon: str, lat: str) -> tuple[Column, Column]:
     return F.expr(sql_mercator_x(lon)), F.expr(sql_mercator_y(lat))

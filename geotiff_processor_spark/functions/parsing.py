@@ -1,70 +1,22 @@
-"""URL/filename identity parsing, deterministic map ids, dual-format dates.
+"""Dual-format vendor dates and the per-row metadata map column.
 
 Reference analogs:
-- registroid / mapId extraction from filenames with ``_MapId-`` prefix and
-  ``_mde`` suffix handling: ``/root/reference/process.py:121-151``,
-  ``params.py:16-20``; ``cleanFilename`` split-on-dash ``helpers.py:51-59``.
-- random mapId ``secrets.token_hex(6)`` (``helpers.py:73-78``) replaced by
-  a *deterministic* 12-hex-char id so resume + golden tests work:
-  ``substring(sha2(registroid, 256), 1, 12)``.
 - dual vendor timestamp formats (``helpers.py:29-42``): DroneDeploy ISO
   with trailing zone chopped ([:-6]) vs Pix4DMatic ``%Y:%m:%d %H:%M:%S``,
   first-non-null wins.
+- the metadata dict attached to every output dataset
+  (``process.py:222-228``).
+
+The url/registro identity and the deterministic 12-hex-char map id
+(``substring(sha2(registroid, 256), 1, 12)``, in place of the
+reference's random ``secrets.token_hex(6)``) are inlined in the
+``url_parsing`` and ``registro_first_wins`` queries.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-DEM_SUFFIX = "_mde"  # params.py:17
-MAPID_PREFIX = "_MapId-"  # params.py:16
-
-
-def sql_registroid_from_url(url: str) -> str:
-    """Page index from our url scheme, /10 => registro (10 pages/registro)."""
-    return f"cast(cast(regexp_extract({url}, 'p/([0-9]+)$', 1) as bigint) / 10 as bigint)"
-
-
-def registroid_from_url(url: str = "url") -> Column:
-    # integer division via floor to stay dialect-neutral with the oracle
-    return F.expr(
-        f"cast(floor(cast(regexp_extract({url}, 'p/([0-9]+)$', 1) as bigint) / 10) as bigint)"
-    )
-
-
-def sql_map_id(registroid: str, dialect: str = "duckdb") -> str:
-    """Deterministic replacement for helpers.py:73-78 (secrets.token_hex).
-
-    Same lowercase-hex sha256 in both engines (verified); only the
-    function name differs by dialect.
-    """
-    fn = "sha256" if dialect == "duckdb" else "sha2"
-    arg = f"cast({registroid} as string)"
-    return (
-        f"substring({fn}({arg}), 1, 12)"
-        if dialect == "duckdb"
-        else f"substring(sha2({arg}, 256), 1, 12)"
-    )
-
-
-def map_id(registroid: str = "registroid") -> Column:
-    return F.expr(f"substring(sha2(cast({registroid} as string), 256), 1, 12)")
-
-
-def clean_filename(name: str = "name") -> Column:
-    """helpers.py:51-59 — keep text before the first dash."""
-    return F.substring_index(F.col(name), "-", 1)
-
-
-def remove_extension(name: str = "name") -> Column:
-    """helpers.py:22-23."""
-    return F.regexp_replace(F.col(name), r"\.[^.]*$", "")
-
-
-def strip_dem_suffix(name: str = "name") -> Column:
-    """process.py:128-136 — registro key for the DEM half of a pair."""
-    return F.substring_index(F.col(name), DEM_SUFFIX, 1)
 
 
 def parse_vendor_date(col: str = "meta_date") -> Column:

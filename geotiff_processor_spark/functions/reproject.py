@@ -35,7 +35,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # UTM grid constants (shared by every ellipsoid)
@@ -91,15 +91,10 @@ GRS80_ELL = TMEllipsoid("GRS80", 6378137.0, 298.257222101)
 # test that the ellipsoid parameter is genuinely load-bearing
 INTL1924_ELL = TMEllipsoid("International 1924", 6378388.0, 297.0)
 
-# legacy module-level aliases (WGS84) — keep existing import sites valid
+# WGS84 values for the Lambert and polar stereographic code below
 A_WGS84 = WGS84_ELL.a
 F_WGS84 = 1.0 / WGS84_ELL.inv_f
-_N = WGS84_ELL.n
-A_RECT = WGS84_ELL.a_rect
-K0A = WGS84_ELL.k0a
-BETA = WGS84_ELL.beta
 DELTA = WGS84_ELL.delta
-ALPHA = WGS84_ELL.alpha
 
 RAD2DEG = 180.0 / math.pi
 

@@ -29,10 +29,6 @@ def sql_token_count(text: str, dialect: str = "duckdb") -> str:
     return f"regexp_count({text}, '{TOKEN_RE}')"
 
 
-def token_count(text: str = "text") -> Column:
-    return F.expr(sql_token_count(text, dialect="spark"))
-
-
 def sql_stopword_hits(text: str, lang: str, dialect: str = "duckdb") -> str:
     """Count of space-delimited stopword tokens for one language.
 
@@ -48,17 +44,9 @@ def sql_stopword_hits(text: str, lang: str, dialect: str = "duckdb") -> str:
     return f"size(filter(split({text}, ' '), x -> x IN ({words})))"
 
 
-def stopword_hits(text: str, lang: str) -> Column:
-    return F.expr(sql_stopword_hits(text, lang, dialect="spark"))
-
-
 def sql_fingerprint(text: str, dialect: str = "duckdb") -> str:
     """64-bit-ish document fingerprint: first 16 hex chars of md5."""
     return f"substring(md5({text}), 1, 16)"
-
-
-def fingerprint(text: str = "text") -> Column:
-    return F.expr(sql_fingerprint(text))
 
 
 def sql_quality_cols(text: str, dialect: str = "duckdb") -> dict[str, str]:

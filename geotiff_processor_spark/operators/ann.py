@@ -1,11 +1,9 @@
 """Similarity search over embedding columns (array<float>).
 
 - ``cosine_topk``: exact brute-force top-k per query against a small
-  broadcast query set. The fold-left ``F.aggregate`` dot product is the
-  oracle-checked path (deterministic summation order); the
-  ``cosine_topk_numpy`` variant is the throughput path (Arrow batches,
-  one BLAS matmul per batch — the 100 TB scale path, since the scan is
-  embarrassingly parallel and only |Q|*k rows per partition survive).
+  broadcast query set. The fold-left ``F.aggregate`` dot product keeps
+  the summation order deterministic, so it is the oracle-checked path
+  and the reference the approximate searches are scored against.
 - ``lsh_bucket_ann``: sign-random-projection LSH — embeddings bucketed
   by a b-bit sign signature against fixed deterministic hyperplanes;
   probing compares only same-bucket candidates.
@@ -68,47 +66,6 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = 5,
         .filter(F.col("rank") <= k)
         .select("query_vec_id", "vec_id",
                 F.col("rank").cast("bigint").alias("rank"), "cos_sim")
-    )
-
-
-def cosine_topk_numpy(embeddings: DataFrame, query_mat: np.ndarray,
-                      query_ids: np.ndarray, k: int = 10) -> DataFrame:
-    """Throughput variant: per-partition numpy matmul local top-k, then a
-    global window over the |Q|*k survivors per partition."""
-    qn = query_mat / np.linalg.norm(query_mat, axis=1, keepdims=True)
-    out_schema = "query_vec_id bigint, vec_id bigint, cos_sim double"
-
-    def local(batches):
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(np.int64)
-            mat = np.stack(pdf["embedding"].to_numpy())  # (n, d) float32
-            mat = mat.astype(np.float64)
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = qn @ mat.T  # (|Q|, n)
-            for qi, qid in enumerate(query_ids):
-                row = sims[qi]
-                mask = ids != qid
-                cand = np.flatnonzero(mask)
-                kk = min(k, len(cand))
-                if kk == 0:
-                    continue
-                top = cand[np.argpartition(-row[cand], kk - 1)[:kk]]
-                yield pd.DataFrame({
-                    "query_vec_id": np.full(kk, qid, dtype=np.int64),
-                    "vec_id": ids[top],
-                    "cos_sim": row[top],
-                })
-
-    local_df = embeddings.select("vec_id", "embedding").mapInPandas(
-        local, schema=out_schema)
-    w = Window.partitionBy("query_vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        local_df.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_vec_id", "vec_id",
-                F.col("rank").cast("bigint").alias("rank"),
-                F.round("cos_sim", 6).alias("cos_sim"))
     )
 
 

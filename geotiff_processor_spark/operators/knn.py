@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.geo import np_cell_id, sql_dist2_mdeg
+from ..functions.geo import sql_dist2_mdeg
 
 
 def knn_exact(geocoded: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:

@@ -9,9 +9,11 @@ Scale design (100 TB pages side, small polygon side):
    computed hierarchical cell id — parent-prefix property, no recompute)
    against the cover table. This is a map-side hash join: no shuffle of
    the pages table at all.
-3. **Exact containment test** as a native column predicate (for the
-   general-polygon path, an Arrow pandas-UDF ray-cast — see
-   ``pip_join_raycast``).
+3. **Exact containment test** as a native column predicate: a bbox
+   test for ``pip_join``; for general polygons, one exact integer
+   ray-cast rule, either fused into codegen (``pip_join_general``, small
+   layers) or run as an Arrow kernel (``pip_join_raycast``, large
+   layers). The caller picks the path.
 
 Reference analog: the outline/mask semantics of
 ``/root/reference/outlines.py:39-59`` (pixels->polygons; here inverted
@@ -159,9 +161,10 @@ def pip_join_general(geocoded: DataFrame, polygons: list[dict],
     Same single-shuffle-free shape as ``pip_join``: broadcast cell-cover
     equi-join prefilter, then the exact ray-cast as a native CASE
     predicate dispatched on polygon_id — all whole-stage codegen, no
-    Python. Scales to 100 TB pages with a bounded broadcast polygon set;
-    for huge polygon layers use ``pip_join_raycast`` (same rule, Arrow
-    kernel)."""
+    Python. Generated code grows with the layer's total vertex count:
+    past a few thousand vertices janino falls back to interpreted code,
+    so use ``pip_join_raycast`` (same rule, Arrow kernel) for large
+    layers."""
     spark = geocoded.sparkSession
     cover = build_cover_table_polys(spark, polygons, level)
     pages_k = geocoded.withColumn(
@@ -217,33 +220,3 @@ def pip_join_raycast(geocoded: DataFrame, polygons: list[dict],
             })
 
     return cand.mapInPandas(verify, schema=out_schema)
-
-
-# Crossover between the two general-polygon plans. The fused path
-# compiles ONE codegen'd CASE branch per polygon, each ~4 bigint ops of
-# SQL per edge: generated-code size grows with total vertex count, and
-# past a few thousand edges janino either splits poorly or falls back to
-# interpreted mode (a silent ~5-10x regression — tests/test_plans.py
-# pins codegen at shipped sizes). The Arrow kernel costs a fixed
-# serialization overhead per candidate row instead, independent of layer
-# complexity. Bound chosen well inside janino's 64KB generated-method
-# comfort zone.
-FUSED_MAX_TOTAL_VERTICES = 2048
-FUSED_MAX_POLYGONS = 256
-
-
-def pip_join_polys(geocoded: DataFrame, polygons: list[dict],
-                   level: int = DEFAULT_COVER_LEVEL) -> DataFrame:
-    """General-polygon PIP join with automatic plan dispatch.
-
-    Small/medium broadcast layers take ``pip_join_general`` (everything
-    whole-stage codegen); layers past FUSED_MAX_* take
-    ``pip_join_raycast`` (same integer ray-cast rule as an Arrow
-    kernel over cover candidates). Both are differential-tested equal;
-    output restricted to the columns the two plans share."""
-    total_vertices = sum(len(p["xs"]) for p in polygons)
-    if (total_vertices <= FUSED_MAX_TOTAL_VERTICES
-            and len(polygons) <= FUSED_MAX_POLYGONS):
-        return pip_join_general(geocoded, polygons, level).select(
-            "url", "polygon_id")
-    return pip_join_raycast(geocoded, polygons, level)

@@ -50,13 +50,14 @@ def tile_rollup_level(tile_counts_df: DataFrame, zoom: int) -> DataFrame:
     )
 
 
-def tile_pyramid_counts(tile_counts_df: DataFrame,
+def tile_pyramid_counts(tile_counts_df: DataFrame, zoom: int,
                         down_to_zoom: int = 0) -> dict[int, DataFrame]:
-    """Roll tile counts up the zoom hierarchy: parent = sum of 4 children."""
-    out = {}
+    """Roll tile counts up the zoom hierarchy: parent = sum of 4 children.
+
+    ``zoom`` is the level ``tile_counts_df`` was built at (the zoom
+    passed to ``tile_counts``). Building the levels runs no job."""
     cur = tile_counts_df
-    zoom = cur.select(F.max("zoom")).first()[0]
-    out[zoom] = cur
+    out = {zoom: cur}
     while zoom > down_to_zoom:
         cur = tile_rollup_level(cur, zoom)
         zoom -= 1

@@ -32,8 +32,6 @@ from pyspark.sql import functions as F
 HOT_CITIES = [(-58400, -34600), (2350, 48850), (139770, 35680)]
 HOT_BOX_MDEG = 200  # hot polygon half-width: jitter is +-50, so all inside
 N_GRID_X, N_GRID_Y = 8, 8
-RASTER_SIZE = 256
-NO_DATA = -10000.0
 
 # ---------------------------------------------------------------------------
 # pages

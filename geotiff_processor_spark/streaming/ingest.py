@@ -4,13 +4,13 @@ The reference's per-file loop (/root/reference/process.py:100-241) maps
 to resumable micro-batch ingestion: each batch is processed through the
 geocode -> cell-encode pipeline and committed with exactly-once file
 sink semantics; the checkpoint directory replaces the in-memory
-processed dict (helpers.py:166-183). Event-time tumbling windows over
-``warc_ts`` provide the throughput-metrics stream.
+processed dict (helpers.py:166-183). Watermarked event-time tumbling
+windows over ``warc_ts`` provide the throughput-metrics stream.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.synth import geocode
@@ -272,15 +272,3 @@ def run_finalized_stream(spark: SparkSession, name: str, cache_key: str,
             pass  # another session already published the same key
         shutil.rmtree(work, ignore_errors=True)
     return out
-
-
-def windowed_throughput(pages: DataFrame,
-                        window: str = "1 hour") -> DataFrame:
-    """Event-time tumbling window counts over warc_ts (batch or stream;
-    add withWatermark upstream for a live stream)."""
-    return (
-        pages.groupBy(F.window("warc_ts", window).alias("w"), "lang")
-        .agg(F.count(F.lit(1)).alias("n_pages"))
-        .select(F.col("w.start").alias("window_start"),
-                "lang", "n_pages")
-    )

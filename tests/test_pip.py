@@ -174,35 +174,26 @@ def test_degenerate_horizontal_ring_sql_parses():
     assert not np_got[0]
 
 
-def test_pip_join_polys_dispatch_and_equivalence(spark, sf_dir):
-    """Auto-dispatch: small layers fuse into codegen CASE, huge layers
-    route to the Arrow kernel; both produce identical rows."""
-    from geotiff_processor_spark.sources import synth
+def test_raycast_many_polygon_layer_matches_oracle(spark, sf_dir, duck):
+    """A many-polygon layer (20 shifted copies of the general polygons)
+    runs through the Arrow kernel and equals the DuckDB ray-cast oracle,
+    built the way ``oracle_sql()["pip_raycast"]`` builds it."""
+    from geotiff_processor_spark.testing import assert_spark_equals_duck
 
-    g = synth.geocode(synth.build_pages(spark, sf_dir, with_html=False))
-    polys = synth.general_polygon_rows()
-
-    small = pip.pip_join_polys(g, polys)
-    fused = pip.pip_join_general(g, polys).select("url", "polygon_id")
-    assert small.exceptAll(fused).count() == 0
-    assert fused.exceptAll(small).count() == 0
-
-    # inflate the layer past the crossover: many shifted copies
-    big = []
-    pid = 0
-    for dx in range(0, 200):
-        for p in polys:
-            q = dict(p)
-            q["polygon_id"] = pid
-            q["xs"] = [x + dx for x in p["xs"]]
-            q["ys"] = list(p["ys"])
-            big.append(q)
-            pid += 1
-    assert sum(len(p["xs"]) for p in big) > pip.FUSED_MAX_TOTAL_VERTICES
-    routed = pip.pip_join_polys(g, big)
-    # Arrow kernel plan: mapInPandas present, no giant CASE
-    plan = routed._jdf.queryExecution().executedPlan().toString()
+    g = _geocoded(spark, sf_dir)
+    layer = []
+    for dx in range(20):
+        for p in synth.general_polygon_rows():
+            layer.append({"polygon_id": len(layer),
+                          "xs": [x + dx for x in p["xs"]],
+                          "ys": list(p["ys"])})
+    out = pip.pip_join_raycast(g, layer)
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
-    kernel = pip.pip_join_raycast(g, big)
-    assert routed.exceptAll(kernel).count() == 0
-    assert kernel.exceptAll(routed).count() == 0
+    oracle = "WITH " + synth.geocoded_cte("duckdb") + "\n" + (
+        "\nUNION ALL\n".join(
+            f"SELECT url, cast({p['polygon_id']} as bigint) AS polygon_id"
+            " FROM geocoded WHERE "
+            + pip.sql_point_in_ring("lonm", "latm", p["xs"], p["ys"])
+            for p in layer))
+    assert_spark_equals_duck(out, duck, oracle, "pip_raycast x20")

@@ -61,10 +61,18 @@ def test_minhash_shuffle_free_single_split(spark, sf_dir):
 def test_tile_pyramid_levels_derive_from_child_level(spark, sf_dir):
     """Zoom z-1 aggregates zoom z's counts (4 rows in per row out) —
     each level adds ONE shuffle over shrinking data; no level rescans
-    the pages table with a fresh wide aggregation."""
+    the pages table with a fresh wide aggregation. Building the levels
+    starts no Spark job: the caller already knows the base zoom."""
     g = synth.geocode(_staged_pages(spark, sf_dir))
     base = tiling.tile_counts(g, zoom=6)
-    levels = tiling.tile_pyramid_counts(base, down_to_zoom=4)
+    sc = spark.sparkContext
+    sc.setJobGroup("tile_pyramid_counts", "build the pyramid levels")
+    try:
+        levels = tiling.tile_pyramid_counts(base, 6, down_to_zoom=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(
+        "tile_pyramid_counts")) == []
     # z4 plan = base shuffle + 2 rollup shuffles
     assert len(_exchanges(_plan(levels[4]))) == 3
     assert len(_exchanges(_plan(levels[5]))) == 2

@@ -15,7 +15,7 @@ def _geocoded(spark, sf_dir):
 def test_write_tiles_partitioned_and_pruned(spark, sf_dir, tmp_path):
     path = str(tmp_path / "tiles")
     base = tiling.tile_counts(_geocoded(spark, sf_dir), zoom=6)
-    levels = tiling.tile_pyramid_counts(base, down_to_zoom=4)
+    levels = tiling.tile_pyramid_counts(base, 6, down_to_zoom=4)
     allz = None
     for z, df in levels.items():
         allz = df if allz is None else allz.unionByName(df)

@@ -32,8 +32,10 @@ def test_available_now_ingest_and_resume(spark, sf_dir, tmp_path):
 
 
 def test_windowed_throughput(spark, sf_dir):
+    import __spark_entry__ as entrymod
+
     pages = synth.build_pages(spark, sf_dir, with_html=False)
-    w = ingest.windowed_throughput(pages)
+    w = entrymod.queries()["hourly_ingest"](spark, sf_dir)
     total = w.agg(F.sum("n_pages")).first()[0]
     assert total == pages.count()
 
