@@ -13,6 +13,12 @@ walked and skipped like PNG ancillary chunks. LZW decode is exact, so
 planted payloads whose palette indices derive from an integer formula
 are end-to-end oracle-checkable regardless of row order or table
 placement.
+
+``decode_gif`` decodes one payload with the scalar LZW reader
+(``_lzw_decode``), the reference. ``decode_gif_batch`` returns the same
+pixels for a whole batch: it decodes the LZW streams together with
+``functions.lzw`` and does the palette lookup and de-interlacing per
+image shape.
 """
 
 from __future__ import annotations
@@ -20,6 +26,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from . import lzw as _lzw
 
 
 def _interlace_rows(h: int) -> np.ndarray:
@@ -95,13 +103,29 @@ def encode_gif(indices: np.ndarray, palette: np.ndarray,
 
 def decode_gif(data: bytes) -> np.ndarray:
     """GIF bytes -> (h, w, 3) uint8 RGB (first frame)."""
+    gct, iw, ih, interlaced, min_code, lzw = _parse_gif(data)
+    idx = np.frombuffer(
+        _lzw_decode(lzw, min_code, iw * ih), np.uint8).astype(np.int32)
+    if idx.size and int(idx.max()) >= len(gct):
+        raise ValueError("corrupt LZW stream: palette index "
+                         "beyond color table")
+    rgb = gct[idx].reshape(ih, iw, 3)
+    if interlaced:
+        deinterlaced = np.empty_like(rgb)
+        deinterlaced[_interlace_rows(ih)] = rgb
+        rgb = deinterlaced
+    return rgb
+
+
+def _parse_gif(data: bytes) -> tuple:
+    """Walk the blocks up to the first image: (color table, width,
+    height, interlaced, LZW min code size, LZW bytes)."""
     data = bytes(data)
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF file")
     if len(data) < 13:
         raise ValueError("truncated GIF payload")
-    w, he = struct.unpack("<HH", data[6:10])
-    packed, _bg, _ar = data[10], data[11], data[12]
+    packed = data[10]
     pos = 13
     gct = None
     if packed & 0x80:
@@ -123,7 +147,9 @@ def decode_gif(data: bytes) -> np.ndarray:
         elif b == 0x2C:
             if pos + 10 > len(data):
                 raise ValueError("truncated GIF payload")
-            left, top, iw, ih = struct.unpack("<HHHH", data[pos + 1:pos + 9])
+            # single-frame contract: the first image block IS the
+            # picture (left/top offsets compose multi-frame GIFs only)
+            iw, ih = struct.unpack("<HH", data[pos + 5:pos + 9])
             ipacked = data[pos + 9]
             pos += 10
             if ipacked & 0x80:  # local color table overrides the GCT
@@ -133,7 +159,6 @@ def decode_gif(data: bytes) -> np.ndarray:
                 gct = np.frombuffer(data, np.uint8, n * 3, pos) \
                     .reshape(n, 3)
                 pos += n * 3
-            interlaced = bool(ipacked & 0x40)
             if gct is None:
                 raise ValueError("missing color table (no GCT or LCT)")
             min_code = _need(pos)
@@ -145,27 +170,61 @@ def decode_gif(data: bytes) -> np.ndarray:
                     raise ValueError("truncated GIF payload")
                 lzw += data[pos + 1:pos + 1 + ln]
                 pos += 1 + ln
-            pos += 1
-            # single-frame contract: the first image block IS the
-            # picture (left/top offsets compose multi-frame GIFs only)
-            del left, top, w, he
-            idx = np.frombuffer(
-                _lzw_decode(bytes(lzw), min_code, iw * ih),
-                np.uint8).astype(np.int32)
-            if idx.size and int(idx.max()) >= len(gct):
-                raise ValueError("corrupt LZW stream: palette index "
-                                 "beyond color table")
-            rgb = gct[idx].reshape(ih, iw, 3)
-            if interlaced:
-                deinterlaced = np.empty_like(rgb)
-                deinterlaced[_interlace_rows(ih)] = rgb
-                rgb = deinterlaced
-            return rgb
+            return gct, iw, ih, bool(ipacked & 0x40), min_code, bytes(lzw)
         elif b == 0x3B:
             break
         else:
             raise ValueError(f"corrupt block 0x{b:02x}")
     raise ValueError("no image block")
+
+
+def decode_gif_batch(datas: list) -> list[np.ndarray]:
+    """``decode_gif`` of every payload, with the LZW streams of all
+    payloads that share a min code size decoded together
+    (``functions.lzw``) and the palette lookup and de-interlacing done
+    per image shape. A payload the batch path cannot finish (a corrupt
+    stream, a min code size outside 2..8) goes through ``decode_gif``,
+    which returns its pixels or raises its ValueError."""
+    out: list = [None] * len(datas)
+    by_code: dict[int, list[tuple]] = {}
+    for i, d in enumerate(datas):
+        try:
+            gct, iw, ih, interlaced, min_code, lzw = _parse_gif(d)
+        except ValueError:
+            out[i] = decode_gif(d)      # raises the reference's error
+            continue
+        if 2 <= min_code <= 8:
+            by_code.setdefault(min_code, []).append(
+                (i, gct, iw, ih, interlaced, lzw))
+        else:
+            out[i] = decode_gif(d)
+    for min_code, items in by_code.items():
+        buf, start, length, ok = _lzw.decode_batch(
+            [it[5] for it in items], [it[2] * it[3] for it in items],
+            min_code, msb=False, early=False)
+        # palette lookup per (height, width, interlaced) group
+        groups: dict[tuple, list[int]] = {}
+        for k, (i, _gct, iw, ih, interlaced, _lzw_bytes) in enumerate(items):
+            if ok[k] and length[k] == iw * ih:
+                groups.setdefault((ih, iw, interlaced), []).append(k)
+            else:
+                out[i] = decode_gif(datas[i])
+        for (ih, iw, interlaced), ks in groups.items():
+            rows = np.arange(ih)
+            if interlaced:      # image row r is stream row rows[r]
+                rows = np.argsort(_interlace_rows(ih))
+            idx = buf[start[ks][:, None]
+                      + (rows[:, None] * iw + np.arange(iw)).ravel()]
+            pals = [items[k][1] for k in ks]
+            n_pal = np.array([len(t) for t in pals])
+            beyond = idx.max(axis=1, initial=0) >= n_pal
+            pal_off = _lzw._excl_cumsum(n_pal)[:-1]
+            rgb = np.take(np.concatenate(pals), idx + pal_off[:, None],
+                          axis=0, mode="clip").reshape(len(ks), ih, iw, 3)
+            for j, k in enumerate(ks):
+                i = items[k][0]
+                out[i] = decode_gif(datas[i]) if beyond[j] else rgb[j]
+    return out
 
 
 _LZW_BASE_TABLES: dict[int, list[bytes]] = {}

@@ -21,6 +21,13 @@ Supported (documented limits, like the PNG codec's):
 - restart intervals (DRI + RSTn), baseline and progressive scans
 - no arithmetic coding, no hierarchical (SOF5+) modes, no 12-bit
 
+``decode_jpeg`` decodes one payload; ``decode_jpeg_batch`` returns the
+same pixels for a batch: it parses each distinct DQT/DHT/SOF/SOS
+segment once per batch, keeps each component's coefficients as one
+flat int64 array (so a group's coefficients reach numpy without a
+conversion per coefficient), and runs dequant + IDCT + color once per
+group of same-geometry payloads. Entropy decoding stays per payload.
+
 The encoder writes its huffman and quantization tables into DHT/DQT
 markers, so any spec-conforming decoder reads its output; the decoder
 builds tables from the file's own markers, so it reads any conforming
@@ -36,6 +43,8 @@ exactly reproducible by SQL arithmetic on the planted block formula.
 
 from __future__ import annotations
 
+import array
+import functools
 import math
 import struct
 
@@ -111,6 +120,8 @@ _CT = np.ascontiguousarray(_C.T)
 # zigzag scatter indices, built once (round 6: rebuilt per decode)
 _ZZ_R = np.array([r for r, _ in ZIGZAG])
 _ZZ_C = np.array([c for _, c in ZIGZAG])
+# a run of zero coefficients to compare a block's band against
+_ZEROS = array.array("q", bytes(8 * 64))
 
 # YCbCr <-> RGB (JFIF full-range) constants; floor(x+0.5) rounding is
 # the shared rounding rule with the SQL oracle
@@ -859,9 +870,10 @@ def _baseline_scan(reader: "_BitReader", store, grids, samps, scan_map,
                 dc_sym, dc_len = tabs[ci][0]
                 ac_sym, ac_len = tabs[ci][1]
                 gw = grids[ci][1]
+                flat = store[ci]
                 for byi in range(vi):
                     for bxi in range(hi):
-                        b = (my * vi + byi) * gw + (mx * hi + bxi)
+                        b64 = ((my * vi + byi) * gw + (mx * hi + bxi)) * 64
                         # DC symbol (magnitude category t)
                         while nbits < 16 and not ended:
                             if pos >= n:
@@ -920,8 +932,7 @@ def _baseline_scan(reader: "_BitReader", store, grids, samps, scan_map,
                             acc &= (1 << nbits) - 1
                             pred[ci] += (bits if bits >= (1 << (t - 1))
                                          else bits - (1 << t) + 1)
-                        block = [0] * 64
-                        block[0] = pred[ci]
+                        flat[b64] = pred[ci]
                         k = 1
                         while k < 64:
                             # AC symbol (run << 4 | size)
@@ -992,11 +1003,10 @@ def _baseline_scan(reader: "_BitReader", store, grids, samps, scan_map,
                                 nbits -= s
                                 bits = (acc >> nbits) & ((1 << s) - 1)
                                 acc &= (1 << nbits) - 1
-                                block[k] = (
+                                flat[b64 + k] = (
                                     bits if bits >= (1 << (s - 1))
                                     else bits - (1 << s) + 1)
                             k += 1
-                        store[ci][b] = block
     reader.pos, reader.acc, reader.nbits, reader.ended = \
         pos, acc, nbits, ended
 
@@ -1007,76 +1017,84 @@ def _prog_dc_scan(reader: "_BitReader", scan_cis, scan_tids, htables,
     """Progressive DC scan (T.81 G.2): first pass (Ah=0) codes the
     DPCM of coefficients >> Al; refinement (Ah>0) is one raw bit per
     block ORed in at bit Al."""
-    read_bits = reader.read_bits
-    pred = {ci: 0 for ci in scan_cis}
-    dc_tabs = {ci: htables[(0, scan_tids[i][0])] if ah == 0 else None
-               for i, ci in enumerate(scan_cis)}
-    mcu_i = 0
-    rst = 0
+    read_bits, read_symbol = reader.read_bits, reader.read_symbol
+    tabs = None
+    if ah == 0:
+        tabs = {ci: htables[(0, dc_tid)]
+                for ci, (dc_tid, _ac_tid) in zip(scan_cis, scan_tids)}
     if len(scan_cis) == 1:
         # non-interleaved scan: the component's own block raster, one
         # block per restart unit (T.81 A.2.2)
-        ci = scan_cis[0]
-        gh, gw = grids[ci]
-        for b in range(gh * gw):
-            if restart_interval and b and b % restart_interval == 0:
-                reader.restart(rst)
-                rst += 1
-                pred = {ci: 0}
-            row = store[ci][b]
+        gh, gw = grids[scan_cis[0]]
+        units = [((scan_cis[0], b * 64),) for b in range(gh * gw)]
+    else:
+        units = _mcu_blocks(tuple(grids), tuple(samps), tuple(scan_cis),
+                            mcuy, mcux)
+    pred = [0] * len(store)
+    rst = 0
+    for u, blocks in enumerate(units):
+        if restart_interval and u and u % restart_interval == 0:
+            reader.restart(rst)
+            rst += 1
+            pred = [0] * len(store)
+        for ci, b64 in blocks:
             if ah == 0:
-                t = reader.read_symbol(dc_tabs[ci])
-                diff = _extend(read_bits(t), t)
-                pred[ci] += diff
-                row[0] = pred[ci] << al
+                t = read_symbol(tabs[ci])
+                pred[ci] += _extend(read_bits(t), t)
+                store[ci][b64] = pred[ci] << al
             elif read_bits(1):
-                row[0] |= 1 << al
-        return
+                store[ci][b64] |= 1 << al
+
+
+@functools.lru_cache(maxsize=64)
+def _mcu_blocks(grids: tuple, samps: tuple, cis: tuple, mcuy: int,
+                mcux: int) -> tuple[tuple[tuple[int, int], ...], ...]:
+    """Per MCU of an interleaved scan, its blocks in scan order as
+    (component, index of the block's first coefficient)."""
+    mcus = []
     for my in range(mcuy):
         for mx in range(mcux):
-            if (restart_interval and mcu_i
-                    and mcu_i % restart_interval == 0):
-                reader.restart(rst)
-                rst += 1
-                pred = {ci: 0 for ci in scan_cis}
-            mcu_i += 1
-            for ci in scan_cis:
+            blocks = []
+            for ci in cis:
                 hi, vi = samps[ci]
                 gw = grids[ci][1]
                 for byi in range(vi):
                     for bxi in range(hi):
-                        b = (my * vi + byi) * gw + (mx * hi + bxi)
-                        row = store[ci][b]
-                        if ah == 0:
-                            t = reader.read_symbol(dc_tabs[ci])
-                            diff = _extend(read_bits(t), t)
-                            pred[ci] += diff
-                            row[0] = pred[ci] << al
-                        elif read_bits(1):
-                            row[0] |= 1 << al
+                        blocks.append(
+                            (ci, ((my * vi + byi) * gw + mx * hi + bxi) * 64))
+            mcus.append(tuple(blocks))
+    return tuple(mcus)
 
 
-def _prog_ac_scan(reader: "_BitReader", ac_tab, blocks, ss, se, ah, al,
+def _prog_ac_scan(reader: "_BitReader", ac_tab, flat, ss, se, ah, al,
                   restart_interval) -> None:
     """Progressive AC scan over ONE component's block raster
     (T.81 G.2.2): spectral band [Ss, Se], first pass or successive-
     approximation refinement, EOB-run and restart aware."""
     eobrun = 0
     rst = 0
-    for b, row in enumerate(blocks):
+    zeros = _ZEROS[:se + 1 - ss]
+    for b in range(len(flat) // 64):
         if restart_interval and b and b % restart_interval == 0:
             reader.restart(rst)
             rst += 1
             eobrun = 0
+        # inside an EOB run a block reads no bits unless it is a
+        # refinement with nonzero coefficients in the band
+        if eobrun and (ah == 0 or flat[b * 64 + ss:b * 64 + se + 1]
+                       == zeros):
+            eobrun -= 1
+            continue
         if ah == 0:
-            eobrun = _ac_first_block(reader, ac_tab, row, ss, se, al,
-                                     eobrun)
+            eobrun = _ac_first_block(reader, ac_tab, flat, b * 64, ss, se,
+                                     al, eobrun)
         else:
-            eobrun = _ac_refine_block(reader, ac_tab, row, ss, se, al,
-                                      eobrun)
+            eobrun = _ac_refine_block(reader, ac_tab, flat, b * 64, ss, se,
+                                      al, eobrun)
 
 
-def _ac_first_block(reader, ac_tab, row, ss, se, al, eobrun) -> int:
+def _ac_first_block(reader, ac_tab, flat, base, ss, se, al,
+                    eobrun) -> int:
     """First AC pass for one block; returns the remaining EOB run.
 
     Hot path: the reader's word-buffer state lives in locals; only a
@@ -1136,14 +1154,15 @@ def _ac_first_block(reader, ac_tab, row, ss, se, al, eobrun) -> int:
             reader.pos, reader.acc, reader.nbits = pos, acc, nbits
             bits = reader.read_bits(s)
             pos, acc, nbits = reader.pos, reader.acc, reader.nbits
-        row[k] = (bits if bits >= (1 << (s - 1))
+        flat[base + k] = (bits if bits >= (1 << (s - 1))
                   else bits - (1 << s) + 1) << al
         k += 1
     reader.pos, reader.acc, reader.nbits = pos, acc, nbits
     return out
 
 
-def _ac_refine_block(reader, ac_tab, row, ss, se, al, eobrun) -> int:
+def _ac_refine_block(reader, ac_tab, flat, base, ss, se, al,
+                     eobrun) -> int:
     """Successive-approximation AC refinement for one block
     (T.81 G.2.2 / the libjpeg decode_mcu_AC_refine control flow):
     newly-nonzero coefficients arrive as +-1<<Al; every already-nonzero
@@ -1214,7 +1233,7 @@ def _ac_refine_block(reader, ac_tab, row, ss, se, al, eobrun) -> int:
                         reader.nbits
                 val = p1 if bit else m1
             while k <= se:
-                c = row[k]
+                c = flat[base + k]
                 if c != 0:
                     if nbits:
                         nbits -= 1
@@ -1227,7 +1246,7 @@ def _ac_refine_block(reader, ac_tab, row, ss, se, al, eobrun) -> int:
                         pos, acc, nbits = reader.pos, reader.acc, \
                             reader.nbits
                     if bit and (c & p1) == 0:
-                        row[k] = c + (p1 if c >= 0 else m1)
+                        flat[base + k] = c + (p1 if c >= 0 else m1)
                 else:
                     r -= 1
                     if r < 0:
@@ -1238,11 +1257,12 @@ def _ac_refine_block(reader, ac_tab, row, ss, se, al, eobrun) -> int:
                     reader.pos, reader.acc, reader.nbits = \
                         pos, acc, nbits
                     raise ValueError("refinement position overflow")
-                row[k] = val
+                flat[base + k] = val
             k += 1
-    if eobrun > 0:
+    if eobrun > 0 and flat[base + k:base + se + 1] != _ZEROS[:se + 1 - k]:
+        # only coefficients that are already nonzero take a bit here
         while k <= se:
-            c = row[k]
+            c = flat[base + k]
             if c != 0:
                 if nbits:
                     nbits -= 1
@@ -1255,8 +1275,9 @@ def _ac_refine_block(reader, ac_tab, row, ss, se, al, eobrun) -> int:
                     pos, acc, nbits = reader.pos, reader.acc, \
                         reader.nbits
                 if bit and (c & p1) == 0:
-                    row[k] = c + (p1 if c >= 0 else m1)
+                    flat[base + k] = c + (p1 if c >= 0 else m1)
             k += 1
+    if eobrun > 0:
         eobrun -= 1
     reader.pos, reader.acc, reader.nbits = pos, acc, nbits
     return eobrun
@@ -1277,18 +1298,19 @@ def decode_jpeg(data: bytes) -> np.ndarray:
 
 
 def decode_jpeg_batch(datas: list[bytes]) -> list[np.ndarray]:
-    """Decode many JPEGs with the entropy/marker parse per payload and
-    the dequant+IDCT+upsample+color stage batched across payloads that
-    share (h, w, nc, sampling, quant tables) — round 6: on corpora of
-    small uniform images the per-image numpy dispatch overhead of
-    stage 2 rivals the entropy decode itself. Identical arithmetic to
-    ``decode_jpeg`` (the batched matmul/floor/clip/YCbCr ops apply the
-    same elementwise/per-block operations), so outputs are
-    bit-identical; errors raise exactly like the per-image path."""
+    """``decode_jpeg`` of every payload. The entropy decode runs per
+    payload; DQT, DHT, SOF and SOS segments are parsed once per distinct
+    segment bytes in the batch; the dequant + IDCT + upsample + color
+    stage runs once per group of payloads that share (h, w, nc,
+    sampling, quant tables), over one coefficient array per component
+    made from the payloads' flat coefficient stores without a copy per
+    coefficient. The arithmetic is ``decode_jpeg``'s, elementwise or
+    per block, so outputs are bit-identical; errors raise as there."""
+    tables: dict[bytes, tuple] = {}
     parsed: list[tuple] = []
     for d in datas:
         try:
-            parsed.append(_parse_jpeg(d))
+            parsed.append(_parse_jpeg(d, tables))
         except (IndexError, struct.error) as e:
             raise ValueError(f"truncated or corrupt JPEG: {e}") from e
     out: list[np.ndarray | None] = [None] * len(parsed)
@@ -1297,28 +1319,11 @@ def decode_jpeg_batch(datas: list[bytes]) -> list[np.ndarray]:
         (store, grids, samps, qtables, comps, h, w, nc, hmax, vmax) = p
         qkey = tuple(qtables[comps[ci][1]].tobytes() for ci in range(nc))
         groups.setdefault((h, w, nc, tuple(samps), qkey), []).append(i)
-    for (h, w, nc, samps, _qk), idxs in groups.items():
+    for (h, w, nc, _samps, _qk), idxs in groups.items():
         p0 = parsed[idxs[0]]
-        grids, qtables, comps, hmax, vmax = p0[1], p0[3], p0[4], p0[8], p0[9]
-        n = len(idxs)
-        planes = []
-        for ci in range(nc):
-            gh, gw = grids[ci]
-            nb = gh * gw
-            q = qtables[comps[ci][1]]
-            big = np.concatenate(
-                [np.asarray(parsed[i][0][ci], np.int64) for i in idxs])
-            coefs = np.zeros((n * nb, 8, 8), np.float64)
-            coefs[:, _ZZ_R, _ZZ_C] = big * q[None, :]
-            spatial = (_CT @ coefs @ _C) + 128.0
-            samples = np.floor(spatial + 0.5).clip(0, 255).astype(np.uint8)
-            plane = samples.reshape(n, gh, gw, 8, 8) \
-                .transpose(0, 1, 3, 2, 4).reshape(n, gh * 8, gw * 8)
-            hi, vi = samps[ci]
-            if (hi, vi) != (hmax, vmax):
-                plane = np.repeat(np.repeat(plane, vmax // vi, axis=1),
-                                  hmax // hi, axis=2)
-            planes.append(plane[:, :h, :w])
+        planes = [_idct_planes(
+            np.frombuffer(b"".join(parsed[i][0][ci] for i in idxs),
+                          np.int64), ci, p0) for ci in range(nc)]
         if nc == 1:
             rgb = np.stack([planes[0]] * 3, axis=-1)
         else:
@@ -1328,36 +1333,50 @@ def decode_jpeg_batch(datas: list[bytes]) -> list[np.ndarray]:
     return out  # type: ignore[return-value]
 
 
+def _idct_planes(coefs_flat: np.ndarray, ci: int, parsed: tuple
+                 ) -> np.ndarray:
+    """Component ``ci`` of n same-geometry images from their zigzag
+    coefficients (n * blocks * 64): dequantize, IDCT, level shift,
+    round, clip and upsample -> (n, h, w) uint8."""
+    _store, grids, samps, qtables, comps, h, w, _nc, hmax, vmax = parsed
+    gh, gw = grids[ci]
+    q = qtables[comps[ci][1]]
+    n = coefs_flat.size // (64 * gh * gw)
+    coefs = np.zeros((n * gh * gw, 8, 8), np.float64)
+    coefs[:, _ZZ_R, _ZZ_C] = coefs_flat.reshape(-1, 64) * q[None, :]
+    # vectorized IDCT over all blocks: spatial = C.T @ coef @ C
+    # (broadcast matmul, NOT einsum: einsum's path setup is ~45 us
+    # per call on tiny block stacks vs ~5 us for matmul)
+    spatial = (_CT @ coefs @ _C) + 128.0
+    samples = np.floor(spatial + 0.5).clip(0, 255).astype(np.uint8)
+    plane = samples.reshape(n, gh, gw, 8, 8) \
+        .transpose(0, 1, 3, 2, 4).reshape(n, gh * 8, gw * 8)
+    hi, vi = samps[ci]
+    if (hi, vi) != (hmax, vmax):  # upsample by sample replication
+        plane = np.repeat(np.repeat(plane, vmax // vi, axis=1),
+                          hmax // hi, axis=2)
+    return plane[:, :h, :w]
+
+
 def _decode_jpeg(data: bytes) -> np.ndarray:
-    (store, grids, samps, qtables, comps,
-     h, w, nc, hmax, vmax) = _parse_jpeg(data)
-    planes = []
-    for ci in range(nc):
-        gh, gw = grids[ci]
-        q = qtables[comps[ci][1]]
-        coefs = np.zeros((gh * gw, 8, 8), np.float64)
-        coefs[:, _ZZ_R, _ZZ_C] = \
-            np.asarray(store[ci], np.int64) * q[None, :]
-        # vectorized IDCT over all blocks: spatial = C.T @ coef @ C
-        # (broadcast matmul, NOT einsum: einsum's path setup is ~45 us
-        # per call on tiny block stacks vs ~5 us for matmul — it was
-        # the single biggest line of the per-decode profile, round 6)
-        spatial = (_CT @ coefs @ _C) + 128.0
-        samples = np.floor(spatial + 0.5).clip(0, 255).astype(np.uint8)
-        plane = samples.reshape(gh, gw, 8, 8) \
-            .transpose(0, 2, 1, 3).reshape(gh * 8, gw * 8)
-        hi, vi = samps[ci]
-        if (hi, vi) != (hmax, vmax):  # upsample by sample replication
-            plane = np.repeat(np.repeat(plane, vmax // vi, axis=0),
-                              hmax // hi, axis=1)
-        planes.append(plane[:h, :w])
+    parsed = _parse_jpeg(data)
+    store, nc = parsed[0], parsed[7]
+    planes = [_idct_planes(np.frombuffer(store[ci], np.int64), ci,
+                           parsed)[0] for ci in range(nc)]
     if nc == 1:
         g = planes[0]
         return np.stack([g, g, g], axis=-1)
     return ycbcr_to_rgb(planes[0], planes[1], planes[2])
 
 
-def _parse_jpeg(data: bytes) -> tuple:
+def _parse_jpeg(data: bytes, tables: dict | None = None) -> tuple:
+    """Markers and entropy-coded scans -> (store, grids, samps,
+    qtables, comps, h, w, nc, hmax, vmax); ``store[ci]`` is component
+    ci's zigzag coefficients, 64 per block, as one flat int64 array.
+    ``tables`` caches parsed DQT, DHT, SOF and SOS segments by their
+    bytes across the payloads of a batch."""
+    if tables is None:
+        tables = {}
     if bytes(data[:2]) != b"\xff\xd8":
         raise ValueError("not a JPEG (bad SOI)")
     pos = 2
@@ -1370,9 +1389,10 @@ def _parse_jpeg(data: bytes) -> tuple:
     restart_interval = 0
     progressive = False
     scan_map: list[tuple[int, int]] = []  # baseline (dc tid, ac tid)
-    # progressive coefficient store: per component, per block, a
-    # mutable [64] zigzag list that successive scans refine in place
-    store: list[list[list[int]]] = []
+    cid_to_ci: dict[int, int] = {}
+    # coefficient store: per component, 64 zigzag int64 per block,
+    # refined in place by successive progressive scans
+    store: list[array.array] = []
     grids: list[tuple[int, int]] = []
     mcuy = mcux = 0
     n = len(data)
@@ -1384,46 +1404,25 @@ def _parse_jpeg(data: bytes) -> tuple:
             break
         (seglen,) = struct.unpack(">H", data[pos + 2:pos + 4])
         body = bytes(data[pos + 4:pos + 2 + seglen])
-        if marker == 0xDB:  # DQT (possibly several tables per segment)
-            b = 0
-            while b < len(body):
-                prec, tid = body[b] >> 4, body[b] & 0xF
-                if prec != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                qtables[tid] = np.frombuffer(
-                    body[b + 1:b + 65], np.uint8).astype(np.int32)
-                b += 65
-        elif marker == 0xC4:  # DHT
-            b = 0
-            while b < len(body):
-                cls, tid = body[b] >> 4, body[b] & 0xF
-                bits = list(body[b + 1:b + 17])
-                nv = sum(bits)
-                vals = list(body[b + 17:b + 17 + nv])
-                htables[(cls, tid)] = _peek_lut(bits, vals)
-                b += 17 + nv
-        elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
-            progressive = marker == 0xC2
-            depth, h, w, nc = struct.unpack(">BHHB", body[:6])
-            if depth != 8 or nc not in (1, 3):
-                raise ValueError("only 8-bit, 1 or 3 components")
-            for ci in range(nc):
-                cid, samp, tq = body[6 + 3 * ci:9 + 3 * ci]
-                hi, vi = samp >> 4, samp & 0xF
-                if hi not in (1, 2) or vi not in (1, 2):
-                    raise ValueError(
-                        "sampling factors beyond 2 unsupported")
-                comps.append((cid, tq))
-                samps.append((hi, vi))
-            hmax = max(s[0] for s in samps)
-            vmax = max(s[1] for s in samps)
-            if h % (8 * vmax) or w % (8 * hmax):
-                raise ValueError(
-                    "dimensions must be multiples of the MCU size")
-            mcuy, mcux = h // (8 * vmax), w // (8 * hmax)
-            grids = [(mcuy * vi, mcux * hi) for hi, vi in samps]
-            store = [[[0] * 64 for _ in range(gh * gw)]
-                     for gh, gw in grids]
+        if marker in (0xDB, 0xC4, 0xC0, 0xC2):
+            key = bytes([marker]) + body
+            seg = tables.get(key)
+            if seg is None:
+                seg = tables[key] = _parse_segment(marker, body)
+            if marker == 0xDB:
+                qtables.update(seg)
+            elif marker == 0xC4:
+                htables.update(seg)
+            else:
+                progressive = marker == 0xC2
+                (h, w, nc, seg_comps, seg_samps, hmax, vmax, mcuy, mcux,
+                 grids) = seg
+                if comps:   # a second SOF: its geometry spans both
+                    hmax, vmax, mcuy, mcux, grids = _geometry(
+                        h, w, samps + seg_samps)
+                comps += seg_comps
+                samps += seg_samps
+                store = _new_store(grids)
         elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
                         0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError(
@@ -1433,32 +1432,35 @@ def _parse_jpeg(data: bytes) -> tuple:
         elif marker == 0xDA:  # SOS
             if not comps:
                 raise ValueError("SOS before SOF")
-            ns = body[0]
+            key = b"\xda" + body
+            sos = tables.get(key)
+            if sos is None:
+                sos = tables[key] = _parse_sos(body)
+            cids, scan_tids, band = sos
             if not progressive:
-                if ns != len(comps):
+                if len(cids) != len(comps):
                     raise ValueError(
                         "baseline partial scans unsupported")
-                scan_map = [(body[2 + 2 * si] >> 4,
-                             body[2 + 2 * si] & 0xF)
-                            for si in range(ns)]
                 pos += 2 + seglen
                 reader = _BitReader(data, pos)
-                _baseline_scan(reader, store, grids, samps, scan_map,
+                if scan_map:    # a second full scan: start from zeros
+                    store = _new_store(grids)
+                _baseline_scan(reader, store, grids, samps, scan_tids,
                                htables, mcuy, mcux, restart_interval)
+                scan_map = scan_tids
                 pos = reader.pos
                 continue
             # progressive scan: component selectors by id + band/approx
-            cid_to_ci = {cid: ci for ci, (cid, _) in enumerate(comps)}
-            scan_cis, scan_tids = [], []
-            for si in range(ns):
-                cid = body[1 + 2 * si]
+            if len(cid_to_ci) != len(comps):
+                cid_to_ci = {cid: ci for ci, (cid, _) in enumerate(comps)}
+            scan_cis = []
+            for cid in cids:
                 if cid not in cid_to_ci:
                     raise ValueError("scan references unknown component")
                 scan_cis.append(cid_to_ci[cid])
-                scan_tids.append((body[2 + 2 * si] >> 4,
-                                  body[2 + 2 * si] & 0xF))
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0xF
+            if band is None:
+                raise IndexError("index out of range")
+            ss, se, ah, al = band
             pos += 2 + seglen
             reader = _BitReader(data, pos)
             if ss == 0:
@@ -1484,3 +1486,72 @@ def _parse_jpeg(data: bytes) -> tuple:
     if not progressive and not scan_map:
         raise ValueError("missing SOS")
     return (store, grids, samps, qtables, comps, h, w, nc, hmax, vmax)
+
+
+def _new_store(grids: list[tuple[int, int]]) -> list[array.array]:
+    return [_ZEROS * (gh * gw) for gh, gw in grids]
+
+
+def _parse_segment(marker: int, body: bytes):
+    """A DQT ({tid: table}), DHT ({(class, tid): LUT}) or SOF segment
+    (geometry) — the parts of a payload that batches often repeat."""
+    if marker == 0xDB:  # DQT (possibly several tables per segment)
+        qtables = {}
+        b = 0
+        while b < len(body):
+            prec, tid = body[b] >> 4, body[b] & 0xF
+            if prec != 0:
+                raise ValueError("16-bit quant tables unsupported")
+            qtables[tid] = np.frombuffer(
+                body[b + 1:b + 65], np.uint8).astype(np.int32)
+            b += 65
+        return qtables
+    if marker == 0xC4:  # DHT
+        htables = {}
+        b = 0
+        while b < len(body):
+            cls, tid = body[b] >> 4, body[b] & 0xF
+            bits = list(body[b + 1:b + 17])
+            nv = sum(bits)
+            vals = list(body[b + 17:b + 17 + nv])
+            htables[(cls, tid)] = _peek_lut(bits, vals)
+            b += 17 + nv
+        return htables
+    # SOF0 baseline / SOF2 progressive
+    depth, h, w, nc = struct.unpack(">BHHB", body[:6])
+    if depth != 8 or nc not in (1, 3):
+        raise ValueError("only 8-bit, 1 or 3 components")
+    comps, samps = [], []
+    for ci in range(nc):
+        cid, samp, tq = body[6 + 3 * ci:9 + 3 * ci]
+        hi, vi = samp >> 4, samp & 0xF
+        if hi not in (1, 2) or vi not in (1, 2):
+            raise ValueError("sampling factors beyond 2 unsupported")
+        comps.append((cid, tq))
+        samps.append((hi, vi))
+    return (h, w, nc, comps, samps) + _geometry(h, w, samps)
+
+
+def _geometry(h: int, w: int, samps: list[tuple[int, int]]) -> tuple:
+    """(hmax, vmax, MCU rows, MCU columns, per-component block grids)."""
+    hmax = max(s[0] for s in samps)
+    vmax = max(s[1] for s in samps)
+    if h % (8 * vmax) or w % (8 * hmax):
+        raise ValueError("dimensions must be multiples of the MCU size")
+    mcuy, mcux = h // (8 * vmax), w // (8 * hmax)
+    return hmax, vmax, mcuy, mcux, [(mcuy * vi, mcux * hi)
+                                    for hi, vi in samps]
+
+
+def _parse_sos(body: bytes) -> tuple:
+    """An SOS header: (component ids, (dc, ac) table ids, (Ss, Se, Ah,
+    Al) or None when the header stops before them)."""
+    ns = body[0]
+    cids = [body[1 + 2 * si] for si in range(ns)]
+    tids = [(body[2 + 2 * si] >> 4, body[2 + 2 * si] & 0xF)
+            for si in range(ns)]
+    band = None
+    if len(body) >= 4 + 2 * ns:
+        ss, se, a = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
+        band = (ss, se, a >> 4, a & 0xF)
+    return cids, tids, band

@@ -4,12 +4,15 @@ Un-stubs the multimodal decode slot (round-2 verdict item 4): the
 container has no image libraries, but PNG is just zlib + per-scanline
 filters, both expressible with the stdlib and numpy. The encoder exists
 so ``synth`` can plant REAL image payloads deterministically; the
-decoder is the production path inside the ``decode_images`` Arrow
-kernel.
+batch decoder is the production path inside the ``decode_images``
+Arrow kernel.
 
 Supported: 8-bit grayscale (color type 0), RGB (2), indexed/PLTE (3)
 and RGBA (6); sequential AND Adam7-interlaced; all five scanline
-filters. Reference analog: the JPEG preview sink of
+filters. ``decode_png`` unfilters one image at a time and is the
+reference; ``decode_png_batch`` returns the same pixels for a batch,
+unfiltering all same-shape (sub-)images of the batch in lockstep.
+Reference analog: the JPEG preview sink of
 ``/root/reference/export_formats/previews.py:24-39`` (there GDAL owns
 the codec; here the engine does, because the 100 TB pipeline decodes in
 executors where native codecs may not be installable).
@@ -17,12 +20,15 @@ executors where native codecs may not be installable).
 
 from __future__ import annotations
 
+import functools
 import struct
 import zlib
 
 import numpy as np
 
 _SIG = b"\x89PNG\r\n\x1a\n"
+# samples per pixel of each supported color type
+_CHANNELS = {0: 1, 2: 3, 3: 1, 6: 4}
 
 
 def _chunk(tag: bytes, body: bytes) -> bytes:
@@ -142,12 +148,46 @@ def decode_png(data: bytes) -> np.ndarray:
     256); Average/Paeth fall back to a per-pixel scan within the row
     (their recurrences are inherently sequential in x).
     """
+    w, h, ctype, interlace, nc, plte, raw = _parse_png(data)
+    if interlace:
+        img = np.zeros((h, w, nc), np.uint8)
+        off = 0
+        for x0, y0, dx, dy, pw, ph in _passes(w, h, 1):
+            nbytes = ph * (1 + pw * nc)
+            if off + nbytes > len(raw):
+                raise ValueError("IDAT size mismatch")
+            sub = _unfilter(raw[off:off + nbytes], ph, pw, nc)
+            img[y0::dy, x0::dx] = sub.reshape(ph, pw, nc)
+            off += nbytes
+        if off != len(raw):
+            raise ValueError("IDAT size mismatch")
+        out2 = img.reshape(h, w * nc)
+    else:
+        if len(raw) != h * (w * nc + 1):
+            raise ValueError("IDAT size mismatch")
+        out2 = _unfilter(raw, h, w, nc)
+    if ctype == 3:
+        idx = out2.reshape(h, w).astype(np.int32)
+        if idx.size and int(idx.max()) >= len(plte):
+            raise ValueError("palette index beyond PLTE")
+        return plte[idx]
+    if ctype == 0:
+        g = out2.reshape(h, w)
+        return np.stack([g, g, g], axis=-1)
+    return out2.reshape(h, w, nc)
+
+
+def _parse_png(data: bytes) -> tuple:
+    """Chunk walk, header checks and inflate: (w, h, color type,
+    interlace, channels, PLTE or None, filtered scanline bytes)."""
     if bytes(data[:8]) != _SIG:
         raise ValueError("not a PNG (bad signature)")
     pos, ihdr, idat, plte = 8, None, bytearray(), None
     n = len(data)
     while pos + 12 <= n:
         (length,) = struct.unpack(">I", data[pos:pos + 4])
+        if pos + 12 + length > n:
+            raise ValueError("truncated PNG chunk")
         tag = bytes(data[pos + 4:pos + 8])
         body = bytes(data[pos + 8:pos + 8 + length])
         (crc,) = struct.unpack(
@@ -175,38 +215,175 @@ def decode_png(data: bytes) -> np.ndarray:
             " gray/RGB/indexed/RGBA, sequential or Adam7")
     if ctype == 3 and plte is None:
         raise ValueError("indexed PNG missing PLTE")
-    nc = {0: 1, 2: 3, 3: 1, 6: 4}[ctype]
-    raw = zlib.decompress(bytes(idat))
-    if interlace:
-        img = np.zeros((h, w, nc), np.uint8)
-        off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue
-            nbytes = ph * (1 + pw * nc)
-            if off + nbytes > len(raw):
-                raise ValueError("IDAT size mismatch")
-            sub = _unfilter(raw[off:off + nbytes], ph, pw, nc)
-            img[y0::dy, x0::dx] = sub.reshape(ph, pw, nc)
-            off += nbytes
-        if off != len(raw):
-            raise ValueError("IDAT size mismatch")
-        out2 = img.reshape(h, w * nc)
-    else:
-        if len(raw) != h * (w * nc + 1):
-            raise ValueError("IDAT size mismatch")
-        out2 = _unfilter(raw, h, w, nc)
-    if ctype == 3:
-        idx = out2.reshape(h, w).astype(np.int32)
-        if idx.size and int(idx.max()) >= len(plte):
-            raise ValueError("palette index beyond PLTE")
-        return plte[idx]
-    if ctype == 0:
-        g = out2.reshape(h, w)
-        return np.stack([g, g, g], axis=-1)
-    return out2.reshape(h, w, nc)
+    nc = _CHANNELS[ctype]
+    return w, h, ctype, interlace, nc, plte, zlib.decompress(bytes(idat))
+
+
+@functools.lru_cache(maxsize=256)
+def _passes(w: int, h: int, interlace: int) -> tuple[tuple, ...]:
+    """The non-empty sub-images of a layout: (x0, y0, dx, dy, width,
+    height) — the seven Adam7 passes, or the whole image."""
+    if not interlace:
+        return ((0, 0, 1, 1, w, h),)
+    out = []
+    for x0, y0, dx, dy in _ADAM7:
+        pw = (w - x0 + dx - 1) // dx
+        ph = (h - y0 + dy - 1) // dy
+        if pw > 0 and ph > 0:
+            out.append((x0, y0, dx, dy, pw, ph))
+    return tuple(out)
+
+
+@functools.lru_cache(maxsize=256)
+def _raw_size(w: int, h: int, interlace: int, nc: int) -> int:
+    """Filtered bytes of a layout: per scanline, a filter byte + samples."""
+    return sum(ph * (1 + pw * nc) for *_, pw, ph in _passes(w, h, interlace))
+
+
+def decode_png_batch(datas: list) -> list[np.ndarray]:
+    """``decode_png`` of every payload. Chunk walk and inflate run per
+    payload; the unfilter runs in lockstep over all same-shape
+    (sub-)images of the batch (each Adam7 pass is a sub-image), and the
+    pass interleave and color expansion run per image layout. A payload
+    the batch path cannot finish goes through ``decode_png``, which
+    returns its pixels or raises its ValueError."""
+    out: list = [None] * len(datas)
+    raws: list[bytes] = []
+    raw_off = 0
+    layouts: dict[tuple, list] = {}     # (w, h, ctype, interlace) -> rows
+    for i, d in enumerate(datas):
+        try:
+            w, h, ctype, interlace, nc, plte, raw = _parse_png(d)
+        except ValueError:
+            out[i] = decode_png(d)      # raises the reference's error
+            continue
+        if not w or not h or len(raw) != _raw_size(w, h, interlace, nc):
+            out[i] = decode_png(d)
+            continue
+        layouts.setdefault((w, h, ctype, interlace), []).append(
+            (i, raw_off, plte))
+        raws.append(raw)
+        raw_off += len(raw)
+    big = np.frombuffer(b"".join(raws), np.uint8)
+    # every (sub-)image, grouped by shape: (layout, pass, raw offsets)
+    jobs: dict[tuple, list] = {}
+    for layout, members in layouts.items():
+        w, h, ctype, interlace = layout
+        nc = _CHANNELS[ctype]
+        off = np.array([m[1] for m in members], np.int64)
+        for step in _passes(w, h, interlace):
+            pw, ph = step[4], step[5]
+            jobs.setdefault((ph, pw, nc), []).append((layout, step, off))
+            off = off + ph * (1 + pw * nc)
+    subs: dict[tuple, list] = {}
+    for (ph, pw, nc), parts in jobs.items():
+        offs = np.concatenate([p[2] for p in parts])
+        rows = big[offs[:, None] + np.arange(ph * (1 + pw * nc))]
+        sub, ok = _unfilter_lockstep(rows.reshape(len(offs), ph, -1), nc)
+        k = 0
+        for layout, step, off in parts:
+            n = len(off)
+            subs.setdefault(layout, []).append(
+                (step, sub[k:k + n].reshape(n, ph, pw, nc), ok[k:k + n]))
+            k += n
+    for layout, members in layouts.items():
+        w, h, ctype, interlace = layout
+        n = len(members)
+        parts = subs[layout]
+        good = np.logical_and.reduce([p[2] for p in parts])
+        if interlace:
+            img = np.zeros((n, h, w, _CHANNELS[ctype]), np.uint8)
+            for (x0, y0, dx, dy, _pw, _ph), sub, _ok in parts:
+                img[:, y0::dy, x0::dx] = sub
+        else:
+            img = parts[0][1]
+        if ctype == 3:
+            idx = img[..., 0]
+            pltes = [m[2] for m in members]
+            n_pal = np.array([len(t) for t in pltes])
+            good &= idx.reshape(n, -1).max(axis=1, initial=0) < n_pal
+            pal_off = np.zeros(n, np.int64)
+            np.cumsum(n_pal[:-1], out=pal_off[1:])
+            img = np.take(np.concatenate(pltes),
+                          idx + pal_off[:, None, None], axis=0, mode="clip")
+        elif ctype == 0:
+            img = np.repeat(img, 3, axis=3)
+        for j, (i, _off, _plte) in enumerate(members):
+            out[i] = img[j] if good[j] else decode_png(datas[i])
+    return out
+
+
+def _unfilter_lockstep(rows: np.ndarray, nc: int
+                       ) -> tuple[np.ndarray, np.ndarray]:
+    """Reverse the scanline filters of k same-shape (sub-)images at
+    once: ``rows`` is (k, h, 1 + stride) filtered bytes. Returns the
+    (k, h, stride) samples and which images used only known filters.
+    Rows advance one scanline at a time for all images; Average and
+    Paeth also advance one pixel at a time across images (same
+    arithmetic as ``_unfilter``, in uint8/int16 with wrap-around)."""
+    k, h, _ = rows.shape
+    ftypes = rows[:, :, 0]
+    ok = (ftypes <= 4).all(axis=1)
+    data = rows[:, :, 1:]
+    out = np.empty(data.shape, np.uint8)
+    prev = np.zeros((k, data.shape[2]), np.uint8)
+    for y in range(h):
+        f = ftypes[:, y]
+        f0 = int(f[0])
+        if (f == f0).all():
+            groups = [(f0, slice(None))]
+        else:
+            groups = [(int(v), np.flatnonzero(f == v)) for v in np.unique(f)]
+        rec = out[:, y]
+        for v, sel in groups:
+            cur, up = data[sel, y], prev[sel]
+            if v == 0:
+                rec[sel] = cur
+            elif v == 1:    # Sub: per-channel prefix sum mod 256
+                rec[sel] = cur.reshape(len(cur), -1, nc).cumsum(
+                    axis=1, dtype=np.uint8).reshape(len(cur), -1)
+            elif v == 2:    # Up
+                rec[sel] = cur + up
+            elif v == 3:
+                rec[sel] = _average_lockstep(cur, up, nc)
+            elif v == 4:
+                rec[sel] = _paeth_lockstep(cur, up, nc)
+        prev = rec
+    return out, ok
+
+
+def _average_lockstep(cur: np.ndarray, up: np.ndarray, nc: int
+                      ) -> np.ndarray:
+    rec = np.empty_like(cur)
+    rec[:, :nc] = cur[:, :nc] + (up[:, :nc] >> 1)
+    up16 = up.astype(np.uint16)
+    for x in range(nc, cur.shape[1], nc):
+        s = slice(x, x + nc)
+        rec[:, s] = cur[:, s] + ((rec[:, x - nc:x] + up16[:, s]) >> 1) \
+            .astype(np.uint8)
+    return rec
+
+
+def _paeth_lockstep(cur: np.ndarray, up: np.ndarray, nc: int
+                    ) -> np.ndarray:
+    """Paeth with a = left, b = up, c = upper-left; the distances use
+    |p-a| = |b-c|, |p-b| = |a-c| and |p-c| = |(a-c) + (b-c)|."""
+    rec = np.empty_like(cur)
+    rec[:, :nc] = cur[:, :nc] + up[:, :nc]   # a = c = 0: predict b
+    b = up.astype(np.int16)
+    b_c = b[:, nc:] - b[:, :-nc]
+    pa_all = np.abs(b_c)
+    for x in range(nc, cur.shape[1], nc):
+        s, left = slice(x, x + nc), slice(x - nc, x)
+        a = rec[:, left].astype(np.int16)
+        a_c = a - b[:, left]
+        pa = pa_all[:, left]
+        pb = np.abs(a_c)
+        pc = np.abs(a_c + b_c[:, left])
+        pred = np.where((pa <= pb) & (pa <= pc), a,
+                        np.where(pb <= pc, b[:, s], b[:, left]))
+        rec[:, s] = cur[:, s] + pred.astype(np.uint8)
+    return rec
 
 
 def _unfilter(raw: bytes, h: int, w: int, nc: int) -> np.ndarray:

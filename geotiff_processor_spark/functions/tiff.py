@@ -24,6 +24,11 @@ Supported, both directions:
 
 Unsupported (documented, raise ValueError): tiles, palette TIFF,
 JPEG-in-TIFF compression, PlanarConfiguration=2.
+
+``decode_tiff`` decodes one payload, LZW strips with the scalar
+``lzw_decode``; it is the reference. ``decode_tiff_batch`` returns the
+same for a whole batch, with the LZW strips of all payloads decoded
+together by ``functions.lzw``.
 """
 
 from __future__ import annotations
@@ -32,6 +37,8 @@ import struct
 import zlib
 
 import numpy as np
+
+from . import lzw as _lzw
 
 # tag ids
 _WIDTH, _HEIGHT = 256, 257
@@ -371,51 +378,105 @@ def encode_tiff(img: np.ndarray, compression: int = 1,
             + b"".join(extra) + b"".join(strips))
 
 
+_VALUE_FORMATS = {3: "H", 4: "I", 11: "f", 12: "d"}
+
+
 def _read_values(data: bytes, e: str, typ: int, count: int,
-                 value_field: bytes) -> list:
+                 field: int) -> list:
+    """Values of one IFD entry whose 4-byte value field is at ``field``."""
     size = _TYPE_SIZES.get(typ)
     if size is None:
         raise ValueError(f"unsupported TIFF IFD type {typ}")
     total = size * count
-    if total <= 4:
-        raw = value_field[:total]
-    else:
-        (off,) = struct.unpack(e + "I", value_field)
+    off = field
+    if total > 4:
+        (off,) = struct.unpack_from(e + "I", data, field)
         if off + total > len(data):
             raise ValueError("corrupt TIFF: tag data past EOF")
-        raw = data[off:off + total]
-    if typ in (3,):
-        return list(struct.unpack(f"{e}{count}H", raw))
-    if typ in (4,):
-        return list(struct.unpack(f"{e}{count}I", raw))
-    if typ == 12:
-        return list(struct.unpack(f"{e}{count}d", raw))
-    if typ == 11:
-        return list(struct.unpack(f"{e}{count}f", raw))
-    return list(raw)
+    fmt = _VALUE_FORMATS.get(typ)
+    if fmt is None:
+        return list(data[off:off + total])
+    return list(struct.unpack_from(f"{e}{count}{fmt}", data, off))
 
 
 def decode_tiff(data: bytes) -> tuple[np.ndarray, dict]:
     """(pixels, meta): (h, w, 3) uint8 RGB or (h, w) float32 DEM, plus
     {width, height, compression, pixel_scale, tiepoint, epsg}."""
+    layout = _parse_tiff(data)
+    blocks = [_strip_bytes(layout, strip) for strip in layout["strips"]]
+    return _assemble(layout, blocks)
+
+
+def decode_tiff_batch(datas: list) -> list[tuple[np.ndarray, dict]]:
+    """``decode_tiff`` of every payload, with the LZW strips of all
+    payloads decoded together (``functions.lzw``). A payload the batch
+    path cannot finish goes through ``decode_tiff``, which returns its
+    result or raises its ValueError."""
+    out: list = [None] * len(datas)
+    layouts: dict[int, dict] = {}
+    lzw_jobs: list[tuple[int, int]] = []     # (payload, strip)
+    for i, d in enumerate(datas):
+        try:
+            layout = _parse_tiff(d)
+        except ValueError:
+            out[i] = decode_tiff(d)            # raises the reference's error
+            continue
+        layouts[i] = layout
+        if layout["compression"] == 5:
+            lzw_jobs += [(i, k) for k, (off, cnt, _r, expected)
+                         in enumerate(layout["strips"])
+                         if expected and off + cnt <= len(d)]
+    lzw_out: dict[tuple[int, int], bytes] = {}
+    if lzw_jobs:
+        strips = [layouts[i]["strips"][k] for i, k in lzw_jobs]
+        buf, start, length, ok = _lzw.decode_batch(
+            [d[off:off + cnt] for (off, cnt, _r, _e), d in
+             zip(strips, (datas[i] for i, _ in lzw_jobs))],
+            [st[3] for st in strips], 8, msb=True, early=True)
+        for n, job in enumerate(lzw_jobs):
+            if ok[n] and length[n] == strips[n][3]:
+                lzw_out[job] = buf[start[n]:start[n] + length[n]].tobytes()
+    for i, layout in layouts.items():
+        try:
+            blocks = []
+            for k, strip in enumerate(layout["strips"]):
+                block = lzw_out.get((i, k))
+                blocks.append(_strip_bytes(layout, strip) if block is None
+                              else _unpredict(layout, strip, block))
+            out[i] = _assemble(layout, blocks)
+        except ValueError:
+            out[i] = decode_tiff(datas[i])
+    return out
+
+
+def _parse_tiff(data: bytes) -> dict:
+    """Header, IFD and tag checks: everything but the strip data."""
     if data[:4] == b"II*\0":
         e = "<"
     elif data[:4] == b"MM\0*":
         e = ">"
     else:
         raise ValueError(f"not a TIFF: magic {data[:4]!r}")
+    if len(data) < 8:
+        raise ValueError("corrupt TIFF: truncated header")
     (ifd_off,) = struct.unpack(e + "I", data[4:8])
     if ifd_off + 2 > len(data):
         raise ValueError("corrupt TIFF: IFD past EOF")
     (n,) = struct.unpack(e + "H", data[ifd_off:ifd_off + 2])
     tags: dict[int, list] = {}
+    head = struct.Struct(e + "HHII")
     for i in range(n):
         base = ifd_off + 2 + 12 * i
-        entry = data[base:base + 12]
-        if len(entry) < 12:
+        if base + 12 > len(data):
             raise ValueError("corrupt TIFF: truncated IFD")
-        tag, typ, count = struct.unpack(e + "HHI", entry[:8])
-        tags[tag] = _read_values(data, e, typ, count, entry[8:12])
+        tag, typ, count, field = head.unpack_from(data, base)
+        if count == 1 and typ == _TYPE_LONG:
+            tags[tag] = [field]
+        elif count == 1 and typ == _TYPE_SHORT:
+            # a SHORT sits in the first two bytes of the value field
+            tags[tag] = [field >> 16 if e == ">" else field & 0xFFFF]
+        else:
+            tags[tag] = _read_values(data, e, typ, count, base + 8)
 
     def one(tag, default=None):
         v = tags.get(tag)
@@ -451,34 +512,11 @@ def decode_tiff(data: bytes) -> tuple[np.ndarray, dict]:
         raise ValueError("corrupt TIFF: strip tables missing/mismatched")
     rows_per_strip = one(_ROWS_PER_STRIP, h)
     row_bytes = w * spp * itemsize
-    raw = bytearray()
+    # (offset, byte count, rows, decoded bytes) per strip
+    strips = []
     for si, (off, cnt) in enumerate(zip(offsets, counts)):
-        if off + cnt > len(data):
-            raise ValueError("corrupt TIFF: strip past EOF")
-        strip = data[off:off + cnt]
         n_rows = min(rows_per_strip, h - si * rows_per_strip)
-        expected = n_rows * row_bytes
-        if compression == 1:
-            if len(strip) < expected:
-                raise ValueError("corrupt TIFF: short strip")
-            block = strip[:expected]
-        elif compression == 8:
-            block = zlib.decompress(bytes(strip))
-        elif compression == 5:
-            block = lzw_decode(bytes(strip), expected)
-        else:
-            block = packbits_decode(strip, expected)
-        if predictor == 2:
-            if itemsize != 1:
-                raise ValueError("predictor 2 on non-uint8 samples")
-            block = _predict2_decode(block, n_rows, w, spp)
-        raw += block
-    if len(raw) != h * row_bytes:
-        raise ValueError("corrupt TIFF: assembled pixel data size")
-    arr = np.frombuffer(bytes(raw), dtype=e + {1: "u1", 4: "f4"}[itemsize])
-    if e == ">":
-        arr = arr.astype(dtype)
-    arr = arr.reshape((h, w, spp)) if spp == 3 else arr.reshape((h, w))
+        strips.append((off, cnt, n_rows, n_rows * row_bytes))
 
     scale = tags.get(_PIXEL_SCALE)
     tie = tags.get(_TIEPOINT)
@@ -488,10 +526,57 @@ def decode_tiff(data: bytes) -> tuple[np.ndarray, dict]:
         for j in range(4, 4 + 4 * gk[3], 4):
             if j + 3 < len(gk) and gk[j] == _GEODETIC_CRS and gk[j + 1] == 0:
                 epsg = gk[j + 3]
-    return np.asarray(arr, dtype=dtype), {
-        "width": int(w), "height": int(h), "compression": int(compression),
-        "pixel_scale": (float(scale[0]), float(scale[1])) if scale else None,
-        "tiepoint": (float(tie[3]), float(tie[4]))
-        if tie and len(tie) >= 5 else None,
-        "epsg": int(epsg) if epsg is not None else None,
-    }
+    return {
+        "data": data, "e": e, "dtype": dtype, "itemsize": itemsize,
+        "spp": spp, "w": w, "h": h, "predictor": predictor,
+        "compression": compression, "strips": strips, "meta": {
+            "width": int(w), "height": int(h),
+            "compression": int(compression),
+            "pixel_scale": (float(scale[0]), float(scale[1]))
+            if scale else None,
+            "tiepoint": (float(tie[3]), float(tie[4]))
+            if tie and len(tie) >= 5 else None,
+            "epsg": int(epsg) if epsg is not None else None,
+        }}
+
+
+def _strip_bytes(layout: dict, strip: tuple) -> bytes:
+    """One strip, decompressed and un-predicted."""
+    off, cnt, _n_rows, expected = strip
+    if off + cnt > len(layout["data"]):
+        raise ValueError("corrupt TIFF: strip past EOF")
+    raw = layout["data"][off:off + cnt]
+    compression = layout["compression"]
+    if compression == 1:
+        if len(raw) < expected:
+            raise ValueError("corrupt TIFF: short strip")
+        block = raw[:expected]
+    elif compression == 8:
+        block = zlib.decompress(bytes(raw))
+    elif compression == 5:
+        block = lzw_decode(bytes(raw), expected)
+    else:
+        block = packbits_decode(raw, expected)
+    return _unpredict(layout, strip, block)
+
+
+def _unpredict(layout: dict, strip: tuple, block: bytes) -> bytes:
+    if layout["predictor"] == 2:
+        if layout["itemsize"] != 1:
+            raise ValueError("predictor 2 on non-uint8 samples")
+        block = _predict2_decode(block, strip[2], layout["w"],
+                                 layout["spp"])
+    return block
+
+
+def _assemble(layout: dict, blocks: list[bytes]) -> tuple[np.ndarray, dict]:
+    h, w, spp = layout["h"], layout["w"], layout["spp"]
+    itemsize, e = layout["itemsize"], layout["e"]
+    raw = b"".join(blocks)
+    if len(raw) != h * w * spp * itemsize:
+        raise ValueError("corrupt TIFF: assembled pixel data size")
+    arr = np.frombuffer(raw, dtype=e + {1: "u1", 4: "f4"}[itemsize])
+    if e == ">":
+        arr = arr.astype(layout["dtype"])
+    arr = arr.reshape((h, w, spp)) if spp == 3 else arr.reshape((h, w))
+    return np.asarray(arr, dtype=layout["dtype"]), layout["meta"]

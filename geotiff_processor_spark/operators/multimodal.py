@@ -2,10 +2,10 @@
 
 Image/audio/video payloads are opaque ``binary`` columns with a typed
 metadata struct. Every magic kind the sniffer knows decodes for REAL:
-PNG via ``functions.png`` (stdlib zlib), baseline JPEG via
-``functions.jpeg`` (huffman + IDCT + YCbCr->RGB), GIF via
-``functions.gif`` (LZW), RIFF/WAVE via ``functions.wav``, and video
-via ``functions.y4m`` — no PIL/libjpeg/ffmpeg needed. Unknown payload
+PNG via ``functions.png`` (stdlib zlib), JPEG via ``functions.jpeg``
+(huffman + IDCT + YCbCr->RGB), GIF via ``functions.gif`` (LZW),
+(Geo)TIFF via ``functions.tiff``, RIFF/WAVE via ``functions.wav``, and
+video via ``functions.y4m`` — no PIL/libjpeg/ffmpeg needed. Unknown payload
 kinds fall back to a deterministic fake decoder (default) or raise
 (strict mode) — the slot where ffmpeg would plug in on a real cluster
 for compressed video/audio containers.
@@ -13,9 +13,10 @@ for compressed video/audio containers.
 Operators:
 - ``extract_media_meta``: sniff magic bytes + sizes from the binary
   column — native expressions only (substring on binary), no Python.
-- ``decode_images``: mapInPandas batch decoder — real PNG decode where
-  the magic matches, fake/strict elsewhere; emits (h, w, mean RGB),
-  the post-decode feature extraction of a training pipeline.
+- ``decode_images``: mapInPandas batch decoder — real PNG, JPEG, GIF
+  and TIFF decode where the magic matches, fake/strict elsewhere; emits
+  (h, w, mean RGB), the post-decode feature extraction of a training
+  pipeline.
 - ``thumbnail_stats``: "resize" analog — block-average the pixel grid
   to a fixed thumbnail, emit per-channel means (the reference's
   preview downsample, /root/reference/export_formats/previews.py:24-39).
@@ -26,14 +27,19 @@ Operators:
 
 Scale notes: payloads never shuffle (all ops are map-side; aggregations
 happen on extracted features); binary columns stay columnar in parquet
-and are pruned unless referenced. The per-payload loop inside the
-decode kernel is inherent to codec work (each payload is one compressed
-stream); the batch boundary is still Arrow-columnar.
+and are pruned unless referenced. A codec's payloads of one Arrow batch
+decode together: ``decode_{png,jpeg,gif,tiff}_batch`` run the hot
+loops (LZW codes, PNG scanlines, JPEG dequant + IDCT) once per batch in
+numpy, and only container parsing and entropy decoding stay per
+payload. Each batch is decoded in chunks of about ``_CHUNK_BYTES``
+payload bytes, so a worker's decoded pixels stay bounded whatever the
+Arrow batch size.
 """
 
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -84,84 +90,135 @@ def _fake_decode(payload: bytes, h: int = 16, w: int = 16) -> np.ndarray:
     return rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
 
 
+# payload bytes decoded together: each Arrow batch is decoded in slices
+# of about this many payload bytes, which bounds the decoded pixels a
+# worker holds at once whatever the batch size
+_CHUNK_BYTES = 4 << 20
+
+
+def _chunks(payloads: list) -> Iterator[slice]:
+    """Consecutive slices of ``payloads`` of about ``_CHUNK_BYTES`` each
+    (at least one payload)."""
+    n = len(payloads)
+    ends = np.cumsum([len(p) for p in payloads])
+    start = 0
+    while start < n:
+        base = int(ends[start - 1]) if start else 0
+        stop = int(np.searchsorted(ends, base + _CHUNK_BYTES, "right"))
+        stop = max(stop, start + 1)
+        yield slice(start, stop)
+        start = stop
+
+
+def _kind(p: bytes) -> str | None:
+    if p[:4] == b"\x89PNG":
+        return "png"
+    if p[:3] == b"\xff\xd8\xff":
+        return "jpeg"
+    if p[:4] == b"GIF8":
+        return "gif"
+    if p[:4] in (b"II*\0", b"MM\0*"):
+        return "tiff"
+    return None
+
+
+def _decode_chunk(payloads: list[bytes], kinds: tuple[str, ...],
+                  fake_hw: tuple[int, int], strict: bool,
+                  strict_msg: str) -> list[np.ndarray]:
+    """Decode one chunk of payloads as (h, w, 3) images: the payloads of
+    each codec in ``kinds`` go through that codec's batch decoder;
+    others use the fake decoder, or raise in strict mode. PNG keeps RGB
+    of RGBA; a float DEM TIFF becomes a gray 3-band float64 image."""
+    from ..functions.gif import decode_gif_batch
+    from ..functions.jpeg import decode_jpeg_batch
+    from ..functions.png import decode_png_batch
+    from ..functions.tiff import decode_tiff_batch
+
+    imgs: list = [None] * len(payloads)
+    by_kind: dict[str, list[int]] = {}
+    for i, p in enumerate(payloads):
+        kind = _kind(p)
+        if kind in kinds:
+            by_kind.setdefault(kind, []).append(i)
+        elif strict:
+            raise ValueError(strict_msg.format(magic=p[:4]))
+        else:
+            imgs[i] = _fake_decode(p, *fake_hw)
+    decoders = {"png": decode_png_batch, "jpeg": decode_jpeg_batch,
+                "gif": decode_gif_batch, "tiff": decode_tiff_batch}
+    for kind, idxs in by_kind.items():
+        for i, img in zip(idxs, decoders[kind]([payloads[i] for i in idxs])):
+            if kind == "png":
+                img = img[:, :, :3]
+            elif kind == "tiff":
+                img = img[0]
+                if img.ndim != 3:          # float DEM -> gray 3-band
+                    img = np.repeat(
+                        img.astype(np.float64)[:, :, None], 3, axis=2)
+            imgs[i] = img
+    return imgs
+
+
+def _channel_means(imgs: list[np.ndarray]) -> tuple[list, ...]:
+    """(heights, widths, mean_r, mean_g, mean_b) of (h, w, 3) images.
+
+    Means of uint8 images run per same-shape group (integer pixel sums
+    are exact in float64, so a group's reduction is bit-identical to
+    per-image means); float images (DEM gray) keep the per-image mean
+    for exact fp reduction order."""
+    n = len(imgs)
+    hh = [im.shape[0] for im in imgs]
+    ww = [im.shape[1] for im in imgs]
+    mr = [0.0] * n
+    mg = [0.0] * n
+    mb = [0.0] * n
+    by_shape: dict[tuple, list[int]] = {}
+    for i, im in enumerate(imgs):
+        if im.dtype == np.uint8:
+            by_shape.setdefault(im.shape, []).append(i)
+        else:
+            m = im.reshape(-1, 3).mean(axis=0)
+            mr[i], mg[i], mb[i] = float(m[0]), float(m[1]), float(m[2])
+    for idxs in by_shape.values():
+        m = np.stack([imgs[i] for i in idxs]).reshape(
+            len(idxs), -1, 3).mean(axis=1).tolist()
+        for (r, g, b), i in zip(m, idxs):
+            mr[i], mg[i], mb[i] = r, g, b
+    return hh, ww, mr, mg, mb
+
+
 def decode_images(df: DataFrame, payload_col: str = "html",
                   key_col: str = "url", h: int = 16, w: int = 16,
                   strict: bool | None = None) -> DataFrame:
     """Batch image decode via mapInPandas (Arrow-vectorized transfer).
 
     Returns (key, height, width, mean_r, mean_g, mean_b) — the feature
-    extraction a training pipeline runs post-decode. PNG, baseline
-    JPEG and GIF payloads all decode for REAL (functions.png/.jpeg/
-    .gif); unknown payload kinds use the deterministic fake decoder,
-    or raise with strict=True (the remaining ffmpeg slot for
-    compressed containers this repo has no codec for).
+    extraction a training pipeline runs post-decode. PNG, baseline and
+    progressive JPEG, GIF and (Geo)TIFF payloads decode for REAL, each
+    codec's payloads of a chunk together (``decode_*_batch``); unknown
+    payload kinds use the deterministic fake decoder, or raise with
+    strict=True (the remaining ffmpeg slot for compressed containers
+    this repo has no codec for).
     """
     strict = STRICT_DECODE if strict is None else strict
     schema = (f"{key_col} string, height int, width int,"
               " mean_r double, mean_g double, mean_b double")
+    msg = ("no codec for payload magic {magic!r}: only the built-in PNG,"
+           " JPEG, GIF and (Geo)TIFF codecs are available in this"
+           " container (ffmpeg slot)")
 
     def decode(batches):
-        from ..functions.gif import decode_gif
-        from ..functions.jpeg import decode_jpeg_batch
-        from ..functions.png import decode_png
-        from ..functions.tiff import decode_tiff
         for pdf in batches:
             keys = pdf[key_col].tolist()
             payloads = [bytes(p) for p in pdf[payload_col]]
-            imgs: list = [None] * len(payloads)
-            jpeg_idx: list[int] = []
-            for i, p in enumerate(payloads):
-                if p[:4] == b"\x89PNG":
-                    imgs[i] = decode_png(p)[:, :, :3]
-                elif p[:3] == b"\xff\xd8\xff":
-                    jpeg_idx.append(i)  # stage-2-batched below
-                elif p[:4] == b"GIF8":
-                    imgs[i] = decode_gif(p)
-                elif p[:4] in (b"II*\0", b"MM\0*"):
-                    arr = decode_tiff(p)[0]
-                    if arr.ndim != 3:          # float DEM -> gray 3-band
-                        arr = np.repeat(
-                            arr.astype(np.float64)[:, :, None], 3, axis=2)
-                    imgs[i] = arr
-                elif strict:
-                    raise ValueError(
-                        f"no codec for payload magic {p[:4]!r}: only the"
-                        " built-in PNG, JPEG, GIF and (Geo)TIFF codecs"
-                        " are available in this container (ffmpeg slot)")
-                else:
-                    imgs[i] = _fake_decode(p, h, w)
-            if jpeg_idx:
-                decoded = decode_jpeg_batch([payloads[i] for i in jpeg_idx])
-                for i, img in zip(jpeg_idx, decoded):
-                    imgs[i] = img
-            # per-channel means batched across same-shape uint8 images
-            # (integer pixel sums are exact in float64, so the batched
-            # reduction is bit-identical to per-image means); float
-            # images (DEM gray) keep the per-image path for exact fp
-            # reduction-order equivalence
-            n = len(imgs)
-            hh = [0] * n
-            ww = [0] * n
-            mr = [0.0] * n
-            mg = [0.0] * n
-            mb = [0.0] * n
-            by_shape: dict[tuple, list[int]] = {}
-            for i, im in enumerate(imgs):
-                hh[i], ww[i] = im.shape[0], im.shape[1]
-                if im.dtype == np.uint8:
-                    by_shape.setdefault(im.shape, []).append(i)
-                else:
-                    m = im.reshape(-1, 3).mean(axis=0)
-                    mr[i], mg[i], mb[i] = (float(m[0]), float(m[1]),
-                                           float(m[2]))
-            for idxs in by_shape.values():
-                arr = np.stack([imgs[i] for i in idxs])
-                m = arr.reshape(len(idxs), -1, 3).mean(axis=1)
-                for j, i in enumerate(idxs):
-                    mr[i], mg[i], mb[i] = (float(m[j, 0]), float(m[j, 1]),
-                                           float(m[j, 2]))
-            yield pd.DataFrame({key_col: keys, "height": hh, "width": ww,
-                                "mean_r": mr, "mean_g": mg, "mean_b": mb})
+            for part in _chunks(payloads):
+                imgs = _decode_chunk(payloads[part],
+                                     ("png", "jpeg", "gif", "tiff"),
+                                     (h, w), strict, msg)
+                hh, ww, mr, mg, mb = _channel_means(imgs)
+                yield pd.DataFrame({key_col: keys[part], "height": hh,
+                                    "width": ww, "mean_r": mr,
+                                    "mean_g": mg, "mean_b": mb})
 
     return df.select(key_col, payload_col).mapInPandas(decode, schema=schema)
 
@@ -170,7 +227,7 @@ def decode_geotiff(df: DataFrame, payload_col: str = "tiff",
                    key_col: str = "url") -> DataFrame:
     """Batch GeoTIFF decode via mapInPandas (functions/tiff.py): the
     reference's own ingest format, parsed for real — strip walk,
-    PackBits/Deflate decompression, AND the georeferencing tags
+    PackBits/Deflate/LZW decompression, AND the georeferencing tags
     (ModelTiepoint + GeoKeyDirectory EPSG), so the oracle checks the
     geo transform alongside pixel content.
 
@@ -182,31 +239,34 @@ def decode_geotiff(df: DataFrame, payload_col: str = "tiff",
               " lonm bigint, latm bigint, epsg int")
 
     def decode(batches):
-        from ..functions.tiff import decode_tiff
+        from ..functions.tiff import decode_tiff_batch
         for pdf in batches:
-            out = {key_col: pdf[key_col].tolist(), "height": [],
-                   "width": [], "mean_r": [], "mean_g": [], "mean_b": [],
-                   "lonm": [], "latm": [], "epsg": []}
-            for payload in pdf[payload_col]:
-                arr, meta = decode_tiff(bytes(payload))
-                if arr.ndim != 3:              # float DEM -> gray 3-band
-                    arr = np.repeat(
-                        arr.astype(np.float64)[:, :, None], 3, axis=2)
-                means = arr.reshape(-1, 3).mean(axis=0)
-                tie = meta["tiepoint"] or (None, None)
-                out["height"].append(meta["height"])
-                out["width"].append(meta["width"])
-                out["mean_r"].append(float(means[0]))
-                out["mean_g"].append(float(means[1]))
-                out["mean_b"].append(float(means[2]))
-                out["lonm"].append(
-                    None if tie[0] is None else round(tie[0] * 1000))
-                out["latm"].append(
-                    None if tie[1] is None else round(tie[1] * 1000))
-                out["epsg"].append(meta["epsg"])
-            yield pd.DataFrame(
-                {k: (pd.array(v, "Int64") if k in ("lonm", "latm", "epsg")
-                     else v) for k, v in out.items()})
+            keys = pdf[key_col].tolist()
+            payloads = [bytes(p) for p in pdf[payload_col]]
+            for part in _chunks(payloads):
+                decoded = decode_tiff_batch(payloads[part])
+                imgs = []
+                for arr, _meta in decoded:
+                    if arr.ndim != 3:          # float DEM -> gray 3-band
+                        arr = np.repeat(
+                            arr.astype(np.float64)[:, :, None], 3, axis=2)
+                    imgs.append(arr)
+                _hh, _ww, mr, mg, mb = _channel_means(imgs)
+                ties = [meta["tiepoint"] or (None, None)
+                        for _arr, meta in decoded]
+                yield pd.DataFrame({
+                    key_col: keys[part],
+                    "height": [meta["height"] for _a, meta in decoded],
+                    "width": [meta["width"] for _a, meta in decoded],
+                    "mean_r": mr, "mean_g": mg, "mean_b": mb,
+                    "lonm": pd.array([None if t[0] is None
+                                      else round(t[0] * 1000)
+                                      for t in ties], "Int64"),
+                    "latm": pd.array([None if t[1] is None
+                                      else round(t[1] * 1000)
+                                      for t in ties], "Int64"),
+                    "epsg": pd.array([meta["epsg"] for _a, meta in decoded],
+                                     "Int64")})
 
     return df.select(key_col, payload_col).mapInPandas(decode, schema=schema)
 
@@ -223,21 +283,25 @@ def dem_pixels(df: DataFrame, payload_col: str = "tiff",
     schema = f"{key_col} string, px int, py int, elev double"
 
     def gen(batches):
-        from ..functions.tiff import decode_tiff
+        from ..functions.tiff import decode_tiff_batch
         for pdf in batches:
-            for key, payload in zip(pdf[key_col], pdf[payload_col]):
-                arr, _ = decode_tiff(bytes(payload))
-                if arr.ndim != 2:
-                    raise ValueError(
-                        "dem_pixels expects single-band float DEM TIFFs")
-                h, w = arr.shape
-                yy, xx = np.mgrid[0:h, 0:w]
-                yield pd.DataFrame({
-                    key_col: np.repeat(key, h * w),
-                    "px": xx.ravel().astype(np.int32),
-                    "py": yy.ravel().astype(np.int32),
-                    "elev": arr.ravel().astype(np.float64),
-                })
+            keys = pdf[key_col].tolist()
+            payloads = [bytes(p) for p in pdf[payload_col]]
+            for part in _chunks(payloads):
+                decoded = decode_tiff_batch(payloads[part])
+                for key, (arr, _) in zip(keys[part], decoded):
+                    if arr.ndim != 2:
+                        raise ValueError(
+                            "dem_pixels expects single-band float DEM"
+                            " TIFFs")
+                    h, w = arr.shape
+                    yy, xx = np.mgrid[0:h, 0:w]
+                    yield pd.DataFrame({
+                        key_col: np.repeat(key, h * w),
+                        "px": xx.ravel().astype(np.int32),
+                        "py": yy.ravel().astype(np.int32),
+                        "elev": arr.ravel().astype(np.float64),
+                    })
 
     return df.select(key_col, payload_col).mapInPandas(gen, schema)
 
@@ -256,30 +320,39 @@ def decode_audio(df: DataFrame, payload_col: str = "wav",
     def decode(batches):
         from ..functions.wav import decode_wav
         for pdf in batches:
-            decoded = [decode_wav(bytes(p)) for p in pdf[payload_col]]
-            n = len(decoded)
-            out = {key_col: pdf[key_col].tolist(),
-                   "n_frames": [a.shape[0] for _, a in decoded],
-                   "sample_rate": [r for r, _ in decoded],
-                   "n_channels": [a.shape[1] for _, a in decoded],
-                   "mean_abs": [0.0] * n, "peak": [0] * n}
-            # |sample| mean/peak batched across same-shape payloads
-            # (round 6): integer sums are exact in float64 at any
-            # reduction order, so values are identical to per-payload
-            by_shape: dict[tuple, list[int]] = {}
-            for i, (_r, a) in enumerate(decoded):
-                by_shape.setdefault(a.shape, []).append(i)
-            for idxs in by_shape.values():
-                aa = np.abs(np.stack(
-                    [decoded[i][1] for i in idxs]).astype(np.int64))
-                means = aa.reshape(len(idxs), -1).mean(axis=1)
-                peaks = aa.reshape(len(idxs), -1).max(axis=1)
-                for j, i in enumerate(idxs):
-                    out["mean_abs"][i] = float(means[j])
-                    out["peak"][i] = int(peaks[j])
-            yield pd.DataFrame(out)
+            keys = pdf[key_col].tolist()
+            payloads = [bytes(p) for p in pdf[payload_col]]
+            for part in _chunks(payloads):
+                yield _audio_features(keys[part],
+                                      [decode_wav(p) for p in payloads[part]],
+                                      key_col)
 
     return df.select(key_col, payload_col).mapInPandas(decode, schema=schema)
+
+
+def _audio_features(keys: list, decoded: list, key_col: str
+                    ) -> pd.DataFrame:
+    n = len(decoded)
+    out = {key_col: keys,
+           "n_frames": [a.shape[0] for _, a in decoded],
+           "sample_rate": [r for r, _ in decoded],
+           "n_channels": [a.shape[1] for _, a in decoded],
+           "mean_abs": [0.0] * n, "peak": [0] * n}
+    # |sample| mean/peak batched across same-shape payloads: integer
+    # sums are exact in float64 at any reduction order, so values are
+    # identical to per-payload
+    by_shape: dict[tuple, list[int]] = {}
+    for i, (_r, a) in enumerate(decoded):
+        by_shape.setdefault(a.shape, []).append(i)
+    for idxs in by_shape.values():
+        aa = np.abs(np.stack(
+            [decoded[i][1] for i in idxs]).astype(np.int64))
+        means = aa.reshape(len(idxs), -1).mean(axis=1)
+        peaks = aa.reshape(len(idxs), -1).max(axis=1)
+        for j, i in enumerate(idxs):
+            out["mean_abs"][i] = float(means[j])
+            out["peak"][i] = int(peaks[j])
+    return pd.DataFrame(out)
 
 
 def decode_video(df: DataFrame, payload_col: str = "y4m",
@@ -306,46 +379,51 @@ def decode_video(df: DataFrame, payload_col: str = "y4m",
     def decode(batches):
         from ..functions.y4m import decode_y4m
         for pdf in batches:
-            decoded = [(key, decode_y4m(bytes(payload)))
-                       for key, payload in zip(pdf[key_col],
-                                               pdf[payload_col])]
-            # per-frame plane means batched across same-shape payloads
-            # (round 6): uint8 sums are exact in float64 at any
-            # reduction order, so values match the per-payload means
-            all_means: list = [None] * len(decoded)
-            by_shape: dict[tuple, list[int]] = {}
-            for i, (_k, (_w, _h, _fps, frames)) in enumerate(decoded):
-                by_shape.setdefault(frames.shape, []).append(i)
-            for idxs in by_shape.values():
-                stack = np.stack([decoded[i][1][3] for i in idxs]) \
-                    .astype(np.float64)
-                ms = stack.mean(axis=(2, 3))
-                for j, i in enumerate(idxs):
-                    all_means[i] = ms[j]
-            rows = {k: [] for k in (key_col, "frame_idx", "n_frames",
-                                    "width", "height", "fps_num",
-                                    "mean_y", "mean_u", "mean_v")}
-            for i, (key, (w, h, fps, frames)) in enumerate(decoded):
-                mono = frames.ndim == 3  # Cmono: luma only, no chroma
-                means = all_means[i]
-                for fi in range(0, frames.shape[0], every):
-                    rows[key_col].append(key)
-                    rows["frame_idx"].append(fi)
-                    rows["n_frames"].append(frames.shape[0])
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["fps_num"].append(fps[0])
-                    if mono:
-                        rows["mean_y"].append(float(means[fi]))
-                        rows["mean_u"].append(None)
-                        rows["mean_v"].append(None)
-                    else:
-                        rows["mean_y"].append(float(means[fi, 0]))
-                        rows["mean_u"].append(float(means[fi, 1]))
-                        rows["mean_v"].append(float(means[fi, 2]))
-            yield pd.DataFrame(rows)
+            keys = pdf[key_col].tolist()
+            payloads = [bytes(p) for p in pdf[payload_col]]
+            for part in _chunks(payloads):
+                yield _video_rows(keys[part],
+                                  [decode_y4m(p) for p in payloads[part]],
+                                  key_col, every)
 
     return df.select(key_col, payload_col).mapInPandas(decode, schema=schema)
+
+
+def _video_rows(keys: list, decoded: list, key_col: str, every: int
+                ) -> pd.DataFrame:
+    # per-frame plane means batched across same-shape payloads: uint8
+    # sums are exact in float64 at any reduction order, so values match
+    # the per-payload means
+    all_means: list = [None] * len(decoded)
+    by_shape: dict[tuple, list[int]] = {}
+    for i, (_w, _h, _fps, frames) in enumerate(decoded):
+        by_shape.setdefault(frames.shape, []).append(i)
+    for idxs in by_shape.values():
+        stack = np.stack([decoded[i][3] for i in idxs]).astype(np.float64)
+        ms = stack.mean(axis=(2, 3))
+        for j, i in enumerate(idxs):
+            all_means[i] = ms[j]
+    rows = {k: [] for k in (key_col, "frame_idx", "n_frames", "width",
+                            "height", "fps_num", "mean_y", "mean_u",
+                            "mean_v")}
+    for key, (w, h, fps, frames), means in zip(keys, decoded, all_means):
+        mono = frames.ndim == 3  # Cmono: luma only, no chroma
+        for fi in range(0, frames.shape[0], every):
+            rows[key_col].append(key)
+            rows["frame_idx"].append(fi)
+            rows["n_frames"].append(frames.shape[0])
+            rows["width"].append(w)
+            rows["height"].append(h)
+            rows["fps_num"].append(fps[0])
+            if mono:
+                rows["mean_y"].append(float(means[fi]))
+                rows["mean_u"].append(None)
+                rows["mean_v"].append(None)
+            else:
+                rows["mean_y"].append(float(means[fi, 0]))
+                rows["mean_u"].append(float(means[fi, 1]))
+                rows["mean_v"].append(float(means[fi, 2]))
+    return pd.DataFrame(rows)
 
 
 def thumbnail_stats(df: DataFrame, payload_col: str = "html",
@@ -426,47 +504,37 @@ def image_dhash(df: DataFrame, payload_col: str = "png",
     schema = f"{key_col} string, dhash bigint"
 
     def gen(batches):
-        from ..functions.gif import decode_gif
-        from ..functions.jpeg import decode_jpeg
-        from ..functions.png import decode_png
         for pdf in batches:
             keys = pdf[key_col].tolist()
-            imgs = []
-            for payload in pdf[payload_col]:
-                p = bytes(payload)
-                if p[:4] == b"\x89PNG":
-                    img = decode_png(p)[:, :, :3]
-                elif p[:3] == b"\xff\xd8\xff":
-                    img = decode_jpeg(p)
-                elif p[:4] == b"GIF8":
-                    img = decode_gif(p)
-                elif strict:
-                    raise ValueError(
-                        f"no codec for payload magic {p[:4]!r}")
-                else:
-                    img = _fake_decode(p, 8, 8)
-                imgs.append(img)
-            # luma + bit packing vectorized across the batch, grouped
-            # by shape (round 6: ~7 numpy calls per image before) —
-            # identical integer arithmetic, just batched
-            hashes: list[int | None] = [None] * len(imgs)
-            by_shape: dict[tuple, list[int]] = {}
-            for i, im in enumerate(imgs):
-                by_shape.setdefault(im.shape, []).append(i)
-            for idxs in by_shape.values():
-                arr = np.stack([imgs[i] for i in idxs]).astype(np.int64)
-                g = (299 * arr[..., 0] + 587 * arr[..., 1]
-                     + 114 * arr[..., 2])
-                bits = (g[:, :, :-1] > g[:, :, 1:]).reshape(len(idxs), -1)
-                weights = np.left_shift(
-                    np.uint64(1), np.arange(bits.shape[1], dtype=np.uint64))
-                vals = (bits.astype(np.uint64) * weights).sum(axis=1)
-                for i, v in zip(idxs, vals):
-                    hashes[i] = int(v)
-            yield pd.DataFrame({key_col: keys,
-                                "dhash": pd.array(hashes, "int64")})
+            payloads = [bytes(p) for p in pdf[payload_col]]
+            for part in _chunks(payloads):
+                imgs = _decode_chunk(payloads[part], ("png", "jpeg", "gif"),
+                                     (8, 8), strict,
+                                     "no codec for payload magic {magic!r}")
+                yield pd.DataFrame({key_col: keys[part],
+                                    "dhash": pd.array(_dhash(imgs),
+                                                      "int64")})
 
     return df.mapInPandas(gen, schema)
+
+
+def _dhash(imgs: list[np.ndarray]) -> list[int]:
+    """dHash of each (h, w, 3) image (see ``image_dhash``)."""
+    # luma + bit packing vectorized across the images, grouped by shape
+    hashes: list[int] = [0] * len(imgs)
+    by_shape: dict[tuple, list[int]] = {}
+    for i, im in enumerate(imgs):
+        by_shape.setdefault(im.shape, []).append(i)
+    for idxs in by_shape.values():
+        arr = np.stack([imgs[i] for i in idxs]).astype(np.int64)
+        g = 299 * arr[..., 0] + 587 * arr[..., 1] + 114 * arr[..., 2]
+        bits = (g[:, :, :-1] > g[:, :, 1:]).reshape(len(idxs), -1)
+        weights = np.left_shift(
+            np.uint64(1), np.arange(bits.shape[1], dtype=np.uint64))
+        vals = (bits.astype(np.uint64) * weights).sum(axis=1)
+        for i, v in zip(idxs, vals):
+            hashes[i] = int(v)
+    return hashes
 
 
 def sql_image_dhash(dialect: str = "duckdb") -> str:

@@ -318,10 +318,11 @@ def test_progressive_with_restart_intervals():
 
 
 def test_decode_jpeg_batch_bit_identical_mixed_corpus():
-    """decode_jpeg_batch (stage-2 batched across same-geometry
-    payloads, round 6) must reproduce per-image decode_jpeg
-    bit-for-bit on a mixed baseline/progressive, 444/420, multi-size corpus — groups with different geometry or quant
-    tables may never cross-contaminate."""
+    """decode_jpeg_batch (stage 2 batched across same-geometry payloads,
+    table segments parsed once per batch) must reproduce per-image
+    decode_jpeg bit-for-bit on a mixed baseline/progressive, 444/420,
+    restart-interval, multi-size corpus — groups with different
+    geometry or quant tables may never cross-contaminate."""
     rng = np.random.default_rng(7)
     blobs = []
     for size in (16, 32):
@@ -334,9 +335,20 @@ def test_decode_jpeg_batch_bit_identical_mixed_corpus():
                           planes[2][:size // 2, :size // 2]]
             blobs.append(J.encode_jpeg_planes(planes, subsample=sub))
             blobs.append(J.encode_jpeg_progressive(planes, subsample=sub))
+    # restart intervals, baseline and progressive, 4:4:4 and 4:2:0,
+    # each twice so the batch's parsed-segment cache serves repeats
+    planes = [rng.integers(0, 256, (32, 32), np.uint8) for _ in range(3)]
+    sub = [planes[0], planes[1][:16, :16], planes[2][:16, :16]]
+    for ri in (1, 3):
+        for _ in range(2):
+            blobs.append(J.encode_jpeg_planes(planes, restart_interval=ri))
+            blobs.append(J.encode_jpeg_progressive(sub, subsample="420",
+                                                   restart_interval=ri))
     # grayscale single-component member too
     blobs.append(J.encode_jpeg_planes(
         [rng.integers(0, 256, (16, 16), np.uint8)]))
+    blobs.append(J.encode_jpeg_progressive(
+        [rng.integers(0, 256, (24, 40), np.uint8)], restart_interval=2))
     batch = J.decode_jpeg_batch(blobs)
     for blob, got in zip(blobs, batch):
         ref = J.decode_jpeg(blob)

@@ -140,3 +140,66 @@ def test_image_dhash_matches_formula_and_groups_dups(spark, sf_dir):
         "url string, png binary")
     two = multimodal.image_dhash(df, "png", "url", strict=True).collect()
     assert two[0]["dhash"] == two[1]["dhash"]
+
+
+def _mixed_media(spark, sf_dir, n=40):
+    """n rows of each real codec's payloads in one (url, payload) table."""
+    from geotiff_processor_spark.sources import synth as _synth
+    parts = [(_synth.build_media, "png"),
+             (_synth.build_media_jpeg, "jpg"),
+             (_synth.build_media_gif, "gif"),
+             (_synth.build_media_tiff, "tiff")]
+    out = None
+    for build, col in parts:
+        df = build(spark, sf_dir).limit(n).select(
+            F.concat(F.lit(col + ":"), "url").alias("url"),
+            F.col(col).alias("payload"))
+        out = df if out is None else out.unionByName(df)
+    return out
+
+
+def test_decode_images_output_independent_of_arrow_batch_size(spark, sf_dir):
+    """Batches of 7 rows and of 10,000 rows decode to the same rows:
+    the batch decoders and the per-chunk means never mix payloads."""
+    media = _mixed_media(spark, sf_dir)
+    media = spark.createDataFrame(media.collect(), media.schema)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    rows = {}
+    try:
+        for size in (7, 10000):
+            spark.conf.set(conf, str(size))
+            rows[size] = sorted(multimodal.decode_images(
+                media, payload_col="payload", key_col="url",
+                strict=True).collect())
+    finally:
+        spark.conf.set(conf, old)
+    assert len(rows[7]) == 160
+    assert rows[7] == rows[10000]
+
+
+def test_decode_images_corrupt_payload_raises_value_error(spark, sf_dir):
+    """One corrupt payload of each codec fails the query with the
+    codec's ValueError, never an IndexError."""
+    media = _mixed_media(spark, sf_dir, 5).collect()
+    for codec in ("png", "jpg", "gif", "tiff"):
+        rows = [(r["url"], r["payload"]) for r in media]
+        k = next(i for i, r in enumerate(rows) if r[0].startswith(codec))
+        rows[k] = (rows[k][0], rows[k][1][:len(rows[k][1]) // 2])
+        df = spark.createDataFrame(rows, "url string, payload binary")
+        with pytest.raises(Exception) as ei:
+            multimodal.decode_images(df, payload_col="payload",
+                                     key_col="url", strict=True).collect()
+        assert "ValueError" in str(ei.value), codec
+        assert "IndexError" not in str(ei.value), codec
+
+
+def test_chunks_cover_a_batch_in_order_within_the_byte_budget():
+    mb = 1 << 20
+    payloads = [b"x" * n for n in (3 * mb, 3 * mb, 10, 10, 5 * mb, 1)]
+    parts = list(multimodal._chunks(payloads))
+    assert [(p.start, p.stop) for p in parts] == [(0, 1), (1, 4), (4, 5),
+                                                  (5, 6)]
+    for p in parts:
+        size = sum(map(len, payloads[p]))
+        assert size <= multimodal._CHUNK_BYTES or p.stop - p.start == 1
