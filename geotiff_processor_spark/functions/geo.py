@@ -34,14 +34,25 @@ EARTH_RADIUS_M = 6378137.0  # WGS84 / EPSG:3857 sphere radius
 # SQL-text emitters (dialect-neutral: valid in Spark SQL and DuckDB)
 # ---------------------------------------------------------------------------
 
+def _sql_clamp(guard: str, v: str, hi: int) -> str:
+    """``v`` clamped to [0, hi], NULL when ``guard`` is NULL.
+
+    ``greatest``/``least`` skip NULLs in Spark and DuckDB alike, so a bare
+    clamp turns a missing coordinate into 0 (cell ``000000000000``, tile
+    (0, 0)). The guard tests the input column, not ``v``, so ``v`` is
+    still evaluated once."""
+    return (f"(case when {guard} is not null"
+            f" then least(greatest({v}, 0), {hi}) end)")
+
+
 def sql_xi(lonm: str) -> str:
     """Normalized integer x in [0, 359999] from milli-degree longitude."""
-    return f"least(greatest({lonm} + 180000, 0), 359999)"
+    return _sql_clamp(lonm, f"{lonm} + 180000", LON_SPAN - 1)
 
 
 def sql_yi(latm: str) -> str:
     """Normalized integer y (north-up) in [0, 179999] from milli-degree lat."""
-    return f"least(greatest(90000 - {latm}, 0), 179999)"
+    return _sql_clamp(latm, f"90000 - {latm}", LAT_SPAN - 1)
 
 
 def sql_cell_xq(lonm: str, levels: int = DEFAULT_CELL_LEVEL) -> str:
@@ -62,15 +73,16 @@ def sql_cell_id_from_q(xq: str, yq: str,
     """Cell id from precomputed level-`levels` quotient columns.
 
     digit_l = bit (levels-l) of xq + 2 * bit (levels-l) of yq — identical
-    to floor(xi*2^l/SPAN) % 2 by the nested-floor identity.
+    to floor(xi*2^l/SPAN) % 2 by the nested-floor identity. The digits
+    are summed as decimal places of one bigint and rendered zero-padded.
+    DuckDB ranks the bit operators differently from Spark, so every one
+    is parenthesized.
     """
     digits = []
-    for l in range(1, levels + 1):
-        k = 1 << (levels - l)
-        digits.append(
-            f"cast(cast(floor({xq} / {k}) as bigint) % 2"
-            f" + 2 * (cast(floor({yq} / {k}) as bigint) % 2) as string)")
-    return "concat(" + ", ".join(digits) + ")"
+    for s in range(levels):
+        d = f"((({xq}) >> {s}) & 1) | (((({yq}) >> {s}) & 1) << 1)"
+        digits.append(f"(({d}) * {10 ** s})")
+    return f"lpad(cast(({' + '.join(digits)}) as string), {levels}, '0')"
 
 
 def sql_cell_id(lonm: str, latm: str, levels: int = DEFAULT_CELL_LEVEL) -> str:
@@ -93,9 +105,8 @@ def sql_cell_key(lonm: str, latm: str, level: int) -> str:
     Same cell partitioning as the quadkey string at that level, but a
     bigint — integer hash-join keys beat string prefixes in the hot path
     (the string id stays the public/user-facing form)."""
-    xq = f"cast(floor(({sql_xi(lonm)}) * {1 << level} / {LON_SPAN}) as bigint)"
-    yq = f"cast(floor(({sql_yi(latm)}) * {1 << level} / {LAT_SPAN}) as bigint)"
-    return f"(({xq}) * {1 << level} + ({yq}))"
+    return (f"(({sql_cell_xq(lonm, level)}) * {1 << level}"
+            f" + ({sql_cell_yq(latm, level)}))")
 
 
 def cell_key_for_quadkey(cell: str) -> int:
@@ -113,10 +124,8 @@ def cell_key_for_quadkey(cell: str) -> int:
 def sql_tile_x(lonm: str, zoom: int) -> str:
     """XYZ tile column at `zoom` — exact integer arithmetic."""
     n = 1 << zoom
-    return (
-        f"cast(least(greatest(floor(({lonm} + 180000) * {n} / 360000), 0), {n - 1})"
-        " as bigint)"
-    )
+    v = f"floor(({lonm} + 180000) * {n} / 360000)"
+    return f"cast({_sql_clamp(lonm, v, n - 1)} as bigint)"
 
 
 def sql_mercator_x(lon: str) -> str:
@@ -133,7 +142,7 @@ def sql_tile_y(lat: str, zoom: int) -> str:
     """XYZ tile row at `zoom` via Web-Mercator (slippy-map convention)."""
     n = 1 << zoom
     yn = f"((1.0 - ln(tan(pi()/4 + radians({lat})/2)) / pi()) / 2.0)"
-    return f"cast(least(greatest(floor({yn} * {n}), 0), {n - 1}) as bigint)"
+    return f"cast({_sql_clamp(lat, f'floor({yn} * {n})', n - 1)} as bigint)"
 
 
 def sql_dist2_mdeg(lonm_a: str, latm_a: str, lonm_b: str, latm_b: str) -> str:

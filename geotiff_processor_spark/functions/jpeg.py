@@ -174,31 +174,27 @@ def _encode_table(bits: list[int], vals: list[int]
     return out
 
 
-# 16-bit-peek huffman LUTs, memoized on the raw DHT payload: every
-# prefix of a code maps to (symbol, code length) so one table lookup
-# replaces the per-bit tree walk (max baseline code length is 16).
+# 16-bit-peek huffman LUTs, memoized on the raw DHT table bytes (the 16
+# code-length counts, then the symbols): every prefix of a code maps to
+# (symbol, code length) so one table lookup replaces the per-bit tree
+# walk (max baseline code length is 16).
 # Memoization matters because tables arrive per image: a corpus decoded
 # with shared tables (the T.81 K.3 typicals here) builds each LUT once.
-_LUT_CACHE: dict[bytes, tuple[np.ndarray, np.ndarray]] = {}
-
-
-def _peek_lut(bits: list[int], vals: list[int]
-              ) -> tuple[np.ndarray, np.ndarray]:
-    key = bytes(bits) + bytes(vals)
-    hit = _LUT_CACHE.get(key)
-    if hit is not None:
-        return hit
+# Each entry holds about 1 MB, and progressive or optimized-Huffman
+# JPEGs carry per-image tables, so only the most recently used are kept
+# (the benchmark's JPEGs need 10).
+@functools.lru_cache(maxsize=32)
+def _peek_lut(table: bytes) -> tuple[list[int], list[int]]:
     sym_l = np.full(1 << 16, -1, np.int16)
     len_l = np.zeros(1 << 16, np.uint8)
-    for sym, (code, ln) in _encode_table(bits, vals).items():
+    for sym, (code, ln) in _encode_table(table[:16], table[16:]).items():
         lo = code << (16 - ln)
         sym_l[lo:lo + (1 << (16 - ln))] = sym
         len_l[lo:lo + (1 << (16 - ln))] = ln
     # plain lists: the decode loop indexes these once or twice per
     # huffman symbol, and list indexing returns ready Python ints
     # (numpy scalar indexing pays an allocation + int() per lookup)
-    _LUT_CACHE[key] = (sym_l.tolist(), len_l.tolist())
-    return _LUT_CACHE[key]
+    return sym_l.tolist(), len_l.tolist()
 
 
 class _BitWriter:
@@ -1511,10 +1507,8 @@ def _parse_segment(marker: int, body: bytes):
         b = 0
         while b < len(body):
             cls, tid = body[b] >> 4, body[b] & 0xF
-            bits = list(body[b + 1:b + 17])
-            nv = sum(bits)
-            vals = list(body[b + 17:b + 17 + nv])
-            htables[(cls, tid)] = _peek_lut(bits, vals)
+            nv = sum(body[b + 1:b + 17])
+            htables[(cls, tid)] = _peek_lut(bytes(body[b + 1:b + 17 + nv]))
             b += 17 + nv
         return htables
     # SOF0 baseline / SOF2 progressive

@@ -56,6 +56,23 @@ def build_cover_table(spark: SparkSession,
     return df.select(*casts)
 
 
+def _cover_join(pages: DataFrame, cover: DataFrame, level: int) -> DataFrame:
+    """Pages broadcast-joined to their covering cells on ``cell_key``.
+
+    The key and the exact tests that follow are written so that no
+    predicate is null-intolerant on a pages column. An equi-join key or
+    a ``>=`` lets Catalyst infer ``isnotnull`` of its input and push that
+    Filter below geocode's Project, where it repeats the text parse of
+    ``lonm``/``latm`` (three parses per coordinate instead of one). So
+    the key is ``coalesce(key, -1)``, never NULL, and -1 matches no cover
+    cell (cover keys are >= 0); callers wrap a null-intolerant exact
+    test in ``coalesce(test, false)``, which keeps the same rows. Do not
+    simplify the coalesces away: the plan tests pin one parse."""
+    key = f"coalesce({sql_cell_key('lonm', 'latm', level)}, -1)"
+    return pages.withColumn("cell_key", F.expr(key)) \
+        .join(F.broadcast(cover), "cell_key")
+
+
 def pip_join(geocoded: DataFrame, cover: DataFrame,
              level: int = DEFAULT_COVER_LEVEL) -> DataFrame:
     """Broadcast cell-cover PIP join. Input must carry lonm/latm.
@@ -64,15 +81,14 @@ def pip_join(geocoded: DataFrame, cover: DataFrame,
     polygon are dropped (inner join, matching the reference's outline
     semantics where only covered pixels polygonize).
     """
-    pages_k = geocoded.withColumn(
-        "cell_key", F.expr(sql_cell_key("lonm", "latm", level)))
-    joined = pages_k.join(F.broadcast(cover), "cell_key")
-    exact = joined.filter(
+    inside = (
         (F.col("lonm") >= F.col("min_lonm"))
         & (F.col("lonm") < F.col("max_lonm"))
         & (F.col("latm") >= F.col("min_latm"))
         & (F.col("latm") < F.col("max_latm"))
     )
+    exact = _cover_join(geocoded, cover, level) \
+        .filter(F.coalesce(inside, F.lit(False)))
     return exact.drop("cell_key")
 
 
@@ -167,9 +183,7 @@ def pip_join_general(geocoded: DataFrame, polygons: list[dict],
     layers."""
     spark = geocoded.sparkSession
     cover = build_cover_table_polys(spark, polygons, level)
-    pages_k = geocoded.withColumn(
-        "cell_key", F.expr(sql_cell_key("lonm", "latm", level)))
-    joined = pages_k.join(F.broadcast(cover), "cell_key")
+    joined = _cover_join(geocoded, cover, level)
     whens = " ".join(
         f"when {int(p['polygon_id'])} then"
         f" {sql_point_in_ring('lonm', 'latm', p['xs'], p['ys'])}"
@@ -196,9 +210,7 @@ def pip_join_raycast(geocoded: DataFrame, polygons: list[dict],
                                np.asarray(p["ys"], dtype=np.int64))
         for p in polygons
     }
-    pages_k = geocoded.select("url", "lonm", "latm").withColumn(
-        "cell_key", F.expr(sql_cell_key("lonm", "latm", level)))
-    cand = pages_k.join(F.broadcast(cover), "cell_key") \
+    cand = _cover_join(geocoded.select("url", "lonm", "latm"), cover, level) \
         .select("url", "lonm", "latm", "polygon_id")
 
     out_schema = "url string, polygon_id bigint"

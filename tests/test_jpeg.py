@@ -354,3 +354,21 @@ def test_decode_jpeg_batch_bit_identical_mixed_corpus():
         ref = J.decode_jpeg(blob)
         assert got.dtype == ref.dtype and got.shape == ref.shape
         assert np.array_equal(got, ref)
+
+
+def test_lut_cache_is_bounded():
+    """Progressive JPEGs carry per-image Huffman tables; decoding more
+    distinct tables than the LUT cache holds keeps it at its bound, and
+    evicted tables are rebuilt to the same output."""
+    J._peek_lut.cache_clear()
+    rng = np.random.default_rng(11)
+    blobs = [J.encode_jpeg_progressive(
+        [rng.integers(0, 256, (16, 16), np.uint8) for _ in range(3)])
+        for _ in range(16)]
+    batch = J.decode_jpeg_batch(blobs)
+    info = J._peek_lut.cache_info()
+    assert info.misses > info.maxsize
+    assert info.currsize == info.maxsize
+    for blob, got in zip(blobs, batch):
+        assert np.array_equal(got, J.decode_jpeg(blob))
+    assert J._peek_lut.cache_info().currsize == info.maxsize

@@ -86,10 +86,36 @@ def test_general_pip_predicate_in_codegen(spark, sf_dir):
     g = synth.geocode(_staged_pages(spark, sf_dir))
     out = pip.pip_join_general(g, synth.general_polygon_rows())
     fm = _formatted(out)
-    assert "codegen id" in fm
-    # the ray-cast Filter itself carries a codegen id (not fallen back)
-    filt = re.search(r"\(\d+\) Filter \[codegen id : \d+\]", fm)
-    assert filt, fm[:1500]
+    # the operator of the final plan evaluating the ray-cast (the join
+    # condition of the BroadcastHashJoin, or a Filter) carries a codegen
+    # id itself
+    tree = fm[fm.index("== Final Plan =="):fm.index("== Initial Plan ==")]
+    final_ids = set(re.findall(r"\((\d+)\)", tree))
+    holders = []
+    for sec in fm.split("\n\n"):
+        m = re.match(r"\((\d+)\) ", sec)
+        if m and m.group(1) in final_ids and "CASE WHEN (polygon_id" in sec:
+            holders.append(sec)
+    assert holders, fm[:3000]
+    for sec in holders:
+        assert "[codegen id : " in sec.splitlines()[0], sec[:500]
+
+
+def test_pip_paths_parse_each_coordinate_once(spark, sf_dir):
+    """The cover join leaves the optimizer no null-intolerant predicate
+    on a pages column, so no inferred isnotnull Filter is pushed below
+    geocode to repeat its text parse: the optimized plan parses ``loc=``
+    once per coordinate, and no Filter tests the text."""
+    pages = _staged_pages(spark, sf_dir)
+    g = synth.geocode(pages)
+    polys = synth.general_polygon_rows()
+    for name, df in (("flagship", tiling.flagship_pipeline(pages)),
+                     ("general", pip.pip_join_general(g, polys)),
+                     ("raycast", pip.pip_join_raycast(g, polys))):
+        opt = df._jdf.queryExecution().optimizedPlan().toString()
+        assert opt.count("loc=") == 2, (name, opt)
+        filters = re.findall(r"[+:-] Filter .*", opt)
+        assert not [f for f in filters if "text#" in f], (name, opt)
 
 
 def test_chunk_and_scrub_are_shuffle_free(spark, sf_dir):
