@@ -27,6 +27,7 @@ from geotiff_processor_spark.functions.encodings import (
 )
 from geotiff_processor_spark.functions.geo import sql_dist2_mdeg
 from geotiff_processor_spark.functions.parsing import parse_vendor_date
+from geotiff_processor_spark.functions.stages import sql_stages, with_stages
 from geotiff_processor_spark.operators import (
     ann,
     dedup,
@@ -1174,123 +1175,67 @@ def q_rollup_counts(spark, sf_dir):
     )
 
 
-def q_reproject_utm(spark, sf_dir):
-    """Arbitrary-CRS ingest: UTM zone-21S grid coords -> lon/lat via the
-    closed-form Krueger-series inverse transverse Mercator (the engine's
-    analog of the reference's osr.SpatialReference ingest +
-    EPSG:3857 warp, helpers.py:45-48 / geoserverDEM.py:34-38).  Pure
-    native expressions — one whole-stage-codegen projection, no UDF."""
-    import os
+def _reproject_cases() -> dict:
+    """Arbitrary-CRS ingest, one entry per reproject query: projected
+    coordinates synthesized from the event id ``i`` -> lon/lat via the
+    closed-form inverses of functions/reproject.py (the engine's analog
+    of the reference's osr.SpatialReference ingest + EPSG:3857 warp,
+    helpers.py:45-48 / geoserverDEM.py:34-38). Native expressions only —
+    one whole-stage-codegen projection, no UDF.
+
+    Each entry: (x column, y column, x synthesis, y synthesis, the EPSG
+    code the Spark side dispatches on or None to render the stage list
+    directly, the family's stage list as a function of the columns). The
+    oracle always renders the stage list, so for gda94 and merc the hash
+    match also checks the dispatcher's choice of family and constants.
+
+    - utm: zone-21S Krueger-series inverse transverse Mercator;
+    - gda94: the SAME series with GRS80 constants (ETRS89/GDA94/NAD83
+      family), EPSG:28355 = GDA94 / MGA zone 55;
+    - lcc: South America 2-parallel Lambert conformal conic, inverse via
+      the conformal-latitude series;
+    - albers: EPSG:5070 NAD83/Conus Albers (GRS80), the US equal-area
+      analysis grid, inverse via the AUTHALIC-latitude series;
+    - ps: south polar stereographic (EPSG:3031-style, variant B);
+    - merc: EPSG:3857 spherical (Web) Mercator, the reference's own warp
+      target.
+    """
+    from functools import partial
 
     from geotiff_processor_spark.functions import reproject as R
 
-    events = spread(spark.read.parquet(os.path.join(sf_dir, "events.parquet")))
-    src = events.select(F.col("event_id").alias("i")).select(
-        F.expr(synth.SQL_URL).alias("url"),
-        F.expr(f"cast({R.SQL_UTM_EASTING} as bigint)").alias("e_utm"),
-        F.expr(f"cast({R.SQL_UTM_NORTHING} as bigint)").alias("n_utm"),
-    )
-    return R.reproject_utm(src, "e_utm", "n_utm", zone=21, south=True)
+    utm = ("e_utm", "n_utm", R.SQL_UTM_EASTING, R.SQL_UTM_NORTHING)
+    return {
+        "reproject_utm": (*utm, None,
+                          partial(R.utm_stages, zone=21, south=True)),
+        "reproject_gda94": (*utm, 28355, partial(
+            R.utm_stages, zone=55, south=True, ell=R.GRS80_ELL)),
+        "reproject_lcc": ("x_lcc", "y_lcc", R.SQL_LCC_X, R.SQL_LCC_Y,
+                          None, R.lcc_stages),
+        "reproject_albers": ("x_alb", "y_alb", R.SQL_ALB_X, R.SQL_ALB_Y,
+                             None, R.albers_stages),
+        "reproject_ps": ("x_ps", "y_ps", R.SQL_PS_X, R.SQL_PS_Y,
+                         None, R.ps_stages),
+        "reproject_merc": ("x_merc", "y_merc", R.SQL_MERC_X, R.SQL_MERC_Y,
+                           3857, R.merc_stages),
+    }
 
 
-def q_reproject_gda94(spark, sf_dir):
-    """Non-WGS84 datum path: the SAME Krueger series carrying GRS80
-    ellipsoid constants (ETRS89/GDA94/NAD83 family) behind the EPSG
-    dispatcher — EPSG:28355 = GDA94 / MGA zone 55 (southern grid).
-    The oracle inlines the GRS80 constant set, so the hash match
-    proves both engines run the parameterized-ellipsoid series, not
-    the WGS84 one (reference analog: accept-any-EPSG ingest,
-    helpers.py:45-48). Native expressions only."""
-    import os
+def _reproject_query(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    """The Spark side of one ``_reproject_cases`` entry."""
+    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from geotiff_processor_spark.functions import reproject as R
 
-    from geotiff_processor_spark.functions import reproject as R
-
-    events = spread(spark.read.parquet(os.path.join(sf_dir, "events.parquet")))
-    src = events.select(F.col("event_id").alias("i")).select(
-        F.expr(synth.SQL_URL).alias("url"),
-        F.expr(f"cast({R.SQL_UTM_EASTING} as bigint)").alias("e_utm"),
-        F.expr(f"cast({R.SQL_UTM_NORTHING} as bigint)").alias("n_utm"),
-    )
-    return R.reproject_epsg(src, 28355, "e_utm", "n_utm")
-
-
-def q_reproject_lcc(spark, sf_dir):
-    """Arbitrary-CRS ingest, second family: Lambert conformal conic
-    (South America 2-parallel cone) metres -> lon/lat via the
-    closed-form Snyder inverse with the conformal-latitude series —
-    proving the reproject module generalizes beyond transverse Mercator
-    (the reference accepts any EPSG, helpers.py:45-48). Native
-    expressions only."""
-    import os
-
-    from geotiff_processor_spark.functions import reproject as R
-
-    events = spread(spark.read.parquet(os.path.join(sf_dir, "events.parquet")))
-    src = events.select(F.col("event_id").alias("i")).select(
-        F.expr(synth.SQL_URL).alias("url"),
-        F.expr(f"cast({R.SQL_LCC_X} as bigint)").alias("x_lcc"),
-        F.expr(f"cast({R.SQL_LCC_Y} as bigint)").alias("y_lcc"),
-    )
-    return R.reproject_lcc(src, "x_lcc", "y_lcc")
-
-
-def q_reproject_albers(spark, sf_dir):
-    """Arbitrary-CRS ingest, equal-area family: EPSG:5070 NAD83/Conus
-    Albers (GRS80) metres -> lon/lat via the closed-form Snyder
-    inverse with the AUTHALIC-latitude series — the standard US
-    equal-area analysis grid, completing the conic family with the
-    equal-area sibling of LCC. Native expressions only; round-trip
-    pinned against an independent numpy forward in tests."""
-    import os
-
-    from geotiff_processor_spark.functions import reproject as R
-
-    events = spread(spark.read.parquet(os.path.join(sf_dir, "events.parquet")))
-    src = events.select(F.col("event_id").alias("i")).select(
-        F.expr(synth.SQL_URL).alias("url"),
-        F.expr(f"cast({R.SQL_ALB_X} as bigint)").alias("x_alb"),
-        F.expr(f"cast({R.SQL_ALB_Y} as bigint)").alias("y_alb"),
-    )
-    return R.reproject_albers(src, "x_alb", "y_alb")
-
-
-def q_reproject_ps(spark, sf_dir):
-    """Arbitrary-CRS ingest, third family: south polar stereographic
-    (EPSG:3031-style Antarctic grid, variant B with standard parallel)
-    metres -> lon/lat — the conformal-latitude series now serves three
-    projection families (transverse Mercator, LCC, stereographic),
-    matching the reference's accept-any-EPSG surface
-    (helpers.py:45-48). Native expressions only."""
-    import os
-
-    from geotiff_processor_spark.functions import reproject as R
-
-    events = spread(spark.read.parquet(os.path.join(sf_dir, "events.parquet")))
-    src = events.select(F.col("event_id").alias("i")).select(
-        F.expr(synth.SQL_URL).alias("url"),
-        F.expr(f"cast({R.SQL_PS_X} as bigint)").alias("x_ps"),
-        F.expr(f"cast({R.SQL_PS_Y} as bigint)").alias("y_ps"),
-    )
-    return R.reproject_ps(src, "x_ps", "y_ps")
-
-
-def q_reproject_merc(spark, sf_dir):
-    """Arbitrary-CRS ingest, fourth family: spherical (Web) Mercator —
-    EPSG:3857, the reference's own warp TARGET
-    (export_formats/geoserverDEM.py:34-38) — metres -> lon/lat via the
-    two-expression closed-form inverse. Native expressions only; routed
-    through the reproject_epsg dispatcher to pin the 3857 branch."""
-    import os
-
-    from geotiff_processor_spark.functions import reproject as R
-
-    events = spread(spark.read.parquet(os.path.join(sf_dir, "events.parquet")))
-    src = events.select(F.col("event_id").alias("i")).select(
-        F.expr(synth.SQL_URL).alias("url"),
-        F.expr(f"cast({R.SQL_MERC_X} as bigint)").alias("x_merc"),
-        F.expr(f"cast({R.SQL_MERC_Y} as bigint)").alias("y_merc"),
-    )
-    return R.reproject_epsg(src, 3857, "x_merc", "y_merc")
+        x, y, sql_x, sql_y, epsg, stages = _reproject_cases()[name]
+        events = spread(spark.read.parquet(f"{sf_dir}/events.parquet"))
+        src = events.select(F.col("event_id").alias("i")).select(
+            F.expr(synth.SQL_URL).alias("url"),
+            F.expr(f"cast({sql_x} as bigint)").alias(x),
+            F.expr(f"cast({sql_y} as bigint)").alias(y))
+        if epsg is None:
+            return with_stages(src, stages(x, y))
+        return R.reproject_epsg(src, epsg, x, y)
+    return q
 
 
 def q_repetition_signals(spark, sf_dir):
@@ -1774,7 +1719,7 @@ def q_hilbert_cells(spark, sf_dir):
         "url",
         F.expr(geo.sql_cell_xq("lonm", 8)).alias("xq"),
         F.expr(geo.sql_cell_yq("latm", 8)).alias("yq"))
-    hd = H.with_hilbert(g, "xq", "yq", level=8)
+    hd = with_stages(g, H.hilbert_stages("xq", "yq", level=8))
     return (hd.groupBy(F.expr("cast(floor(hilbert_d / 64) as bigint)")
                        .alias("block"))
             .agg(F.count(F.lit(1)).alias("n_pages"),
@@ -1797,8 +1742,7 @@ def q_datum_shift(spark, sf_dir):
         F.expr(synth.SQL_URL).alias("url"),
         F.expr(D.SQL_OSGB_LAT).alias("lat_src"),
         F.expr(D.SQL_OSGB_LON).alias("lon_src"))
-    return D.with_datum_shift(src).select(
-        "url", "lat_src", "lon_src", "lat_dst", "lon_dst")
+    return with_stages(src, D.datum_stages())
 
 
 def q_hll_distinct(spark, sf_dir):
@@ -1836,7 +1780,7 @@ def q_hilbert_bbox_scan(spark, sf_dir):
         "url",
         F.expr(geo.sql_cell_xq("lonm", 8)).alias("xq"),
         F.expr(geo.sql_cell_yq("latm", 8)).alias("yq"))
-    hd = H.with_hilbert(g, "xq", "yq", level=8)
+    hd = with_stages(g, H.hilbert_stages("xq", "yq", level=8))
     return (H.filter_by_ranges(hd, ranges)
             .groupBy("hilbert_d")
             .agg(F.count(F.lit(1)).alias("n_pages")))
@@ -1976,7 +1920,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_jaccard": q_ngram_jaccard,
         "embedding_near_dup": q_embedding_near_dup,
         "metadata_map": q_metadata_map,
-        "reproject_utm": q_reproject_utm,
+        "reproject_utm": _reproject_query("reproject_utm"),
         "hll_distinct": q_hll_distinct,
         "dedup_canonical": q_dedup_canonical,
         "repetition_signals": q_repetition_signals,
@@ -2015,7 +1959,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hilbert_bbox_scan": q_hilbert_bbox_scan,
         "simhash": q_simhash,
         "ann_lsh": q_ann_lsh,
-        "reproject_lcc": q_reproject_lcc,
+        "reproject_lcc": _reproject_query("reproject_lcc"),
         "shuffle_rank": q_shuffle_rank,
         "cell_encode": q_cell_encode,
         "tile_counts": q_tile_counts,
@@ -2037,9 +1981,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": q_dedup_exact,
         "minhash_sigs": q_minhash_sigs,
         "decode_images": q_decode_images,
-        "reproject_ps": q_reproject_ps,
-        "reproject_gda94": q_reproject_gda94,
-        "reproject_merc": q_reproject_merc,
+        "reproject_ps": _reproject_query("reproject_ps"),
+        "reproject_gda94": _reproject_query("reproject_gda94"),
+        "reproject_merc": _reproject_query("reproject_merc"),
         "terrarium_encode": q_terrarium_encode,
         "knn_cell_prefix": q_knn_cell_prefix,
         "pip_raycast": q_pip_raycast,
@@ -2061,7 +2005,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round-5 additions (tail: full oracles in DIFFCHECK/pytest;
         # the 50-slot prefix composition is guarded by test_entry)
         "bpe_apply": q_bpe_apply,
-        "reproject_albers": q_reproject_albers,
+        "reproject_albers": _reproject_query("reproject_albers"),
         "decode_video": q_decode_video,
         "radius_join": q_radius_join,
         "grouped_median": q_grouped_median,
@@ -2389,21 +2333,16 @@ GROUP BY w.doc_id"""
         "documents", "(cast(n_chars as double) / cast(500 as double))",
         10, ["source"])
     from geotiff_processor_spark.functions import datum as _D
-    _dchain = _D.sql_datum_chain("SELECT url, lat_src, lon_src FROM s0")
-    sql["datum_shift"] = f"""WITH p0 AS (SELECT event_id AS i FROM events),
-s0 AS (
-  SELECT {synth.SQL_URL} AS url,
-    {_D.SQL_OSGB_LAT} AS lat_src,
-    {_D.SQL_OSGB_LON} AS lon_src
-  FROM p0
-)
-SELECT url, lat_src, lon_src, lat_dst, lon_dst FROM ({_dchain})"""
+    sql["datum_shift"] = sql_stages(
+        f"SELECT {synth.SQL_URL} AS url, {_D.SQL_OSGB_LAT} AS lat_src,"
+        f" {_D.SQL_OSGB_LON} AS lon_src"
+        " FROM (SELECT event_id AS i FROM events)", _D.datum_stages())
     from geotiff_processor_spark.functions import hilbert as _H
     from geotiff_processor_spark.functions.geo import (
         sql_cell_xq as _sxq, sql_cell_yq as _syq)
-    _hchain = _H.sql_hilbert_chain(
+    _hchain = sql_stages(
         f"SELECT url, {_sxq('lonm', 8)} AS xq, {_syq('latm', 8)} AS yq"
-        " FROM geocoded", "xq", "yq", 8)
+        " FROM geocoded", _H.hilbert_stages("xq", "yq", 8))
     sql["hilbert_cells"] = _with_geo("", f"""
 SELECT cast(floor(hilbert_d / 64) as bigint) AS block,
        count(*) AS n_pages,
@@ -2959,67 +2898,11 @@ k AS (
         " coalesce(kind, '<all>') AS kind, count(*) AS n_pages"
         " FROM k GROUP BY ROLLUP (lang, kind)",
     )
-    from geotiff_processor_spark.functions import reproject as R
-
-    sql["reproject_utm"] = f"""WITH p0 AS (SELECT event_id AS i FROM events),
-u0 AS (
-  SELECT {synth.SQL_URL} AS url,
-    cast({R.SQL_UTM_EASTING} as bigint) AS e_utm,
-    cast({R.SQL_UTM_NORTHING} as bigint) AS n_utm
-  FROM p0
-),
-{R.utm_inverse_cte('u0', ['url'], zone=21, south=True)}
-SELECT url, e_utm, n_utm, lon, lat FROM utm_ll"""
-
-    sql["reproject_gda94"] = f"""WITH p0 AS (SELECT event_id AS i FROM events),
-u0 AS (
-  SELECT {synth.SQL_URL} AS url,
-    cast({R.SQL_UTM_EASTING} as bigint) AS e_utm,
-    cast({R.SQL_UTM_NORTHING} as bigint) AS n_utm
-  FROM p0
-),
-{R.utm_inverse_cte('u0', ['url'], zone=55, south=True, ell=R.GRS80_ELL)}
-SELECT url, e_utm, n_utm, lon, lat FROM utm_ll"""
-
-    sql["reproject_lcc"] = f"""WITH p0 AS (SELECT event_id AS i FROM events),
-l0 AS (
-  SELECT {synth.SQL_URL} AS url,
-    cast({R.SQL_LCC_X} as bigint) AS x_lcc,
-    cast({R.SQL_LCC_Y} as bigint) AS y_lcc
-  FROM p0
-),
-{R.lcc_inverse_cte('l0', ['url'])}
-SELECT url, x_lcc, y_lcc, lon, lat FROM lcc_ll"""
-
-    sql["reproject_albers"] = f"""WITH p0 AS (SELECT event_id AS i FROM events),
-a0 AS (
-  SELECT {synth.SQL_URL} AS url,
-    cast({R.SQL_ALB_X} as bigint) AS x_alb,
-    cast({R.SQL_ALB_Y} as bigint) AS y_alb
-  FROM p0
-),
-{R.albers_inverse_cte('a0', ['url'])}
-SELECT url, x_alb, y_alb, lon, lat FROM alb_ll"""
-
-    sql["reproject_ps"] = f"""WITH p0 AS (SELECT event_id AS i FROM events),
-s0 AS (
-  SELECT {synth.SQL_URL} AS url,
-    cast({R.SQL_PS_X} as bigint) AS x_ps,
-    cast({R.SQL_PS_Y} as bigint) AS y_ps
-  FROM p0
-),
-{R.ps_inverse_cte('s0', ['url'])}
-SELECT url, x_ps, y_ps, lon, lat FROM ps_ll"""
-
-    sql["reproject_merc"] = f"""WITH p0 AS (SELECT event_id AS i FROM events),
-m0 AS (
-  SELECT {synth.SQL_URL} AS url,
-    cast({R.SQL_MERC_X} as bigint) AS x_merc,
-    cast({R.SQL_MERC_Y} as bigint) AS y_merc
-  FROM p0
-),
-{R.merc_inverse_cte('m0', ['url'])}
-SELECT url, x_merc, y_merc, lon, lat FROM merc_ll"""
+    for name, (x, y, sql_x, sql_y, _, stages) in _reproject_cases().items():
+        sql[name] = sql_stages(
+            f"SELECT {synth.SQL_URL} AS url, cast({sql_x} as bigint) AS {x},"
+            f" cast({sql_y} as bigint) AS {y}"
+            " FROM (SELECT event_id AS i FROM events)", stages(x, y))
 
     from geotiff_processor_spark.operators.textprep import (
         EMAIL_RE,

@@ -16,16 +16,17 @@ vector) is:
        inverse (error < 1e-10 deg at earth-surface heights — far below
        the 1e-6 deg output rounding).
 
-Every formula is emitted ONCE as dialect-neutral SQL text and run by
-both Spark (native expressions, whole-stage codegen) and DuckDB (the
-differential oracle); rounding to 6 decimals absorbs last-ulp libm
-differences, the pattern proven by the four reproject families.
+The transform is one stage list (``datum_stages``), emitted ONCE as
+dialect-neutral SQL text; functions/stages.py renders it for Spark
+(native expressions, whole-stage codegen) and for DuckDB (the
+differential oracle). Rounding to 6 decimals absorbs last-ulp libm
+differences, the pattern proven by the reproject families.
 Parameters below are the published OSGB36->WGS84 set (Airy 1830 source
 ellipsoid); ED50->WGS84 or any other pair is the same code with a
 different constant block.
 
 Reference analog: the reference accepts any EPSG via osr and lets
-PROJ do datum shifts implicitly (``/root/reference/helpers.py:45-48``);
+PROJ do datum shifts implicitly (its ``helpers.py:45-48``);
 here the transform is an explicit, oracle-checkable operator.
 """
 
@@ -34,8 +35,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from .stages import Stages
 
 PI = repr(math.pi)
 ARCSEC = math.pi / (180.0 * 3600.0)
@@ -101,11 +101,11 @@ SQL_OSGB_LON = ("(cast(-7.5 as double)"
                 " / cast(100 as double))")
 
 
-def datum_stage_exprs(h: Helmert, lat: str = "lat_src",
-                      lon: str = "lon_src") -> list[dict[str, str]]:
-    """The transform as chained column stages; each dict's expressions
-    reference only columns produced by earlier stages (or the inputs
-    ``lat``/``lon`` in degrees). Identical text runs in both engines.
+def datum_stages(h: Helmert = OSGB36_TO_WGS84, lat: str = "lat_src",
+                 lon: str = "lon_src") -> Stages:
+    """Stage list: ``lat``/``lon`` (degrees on the source datum) ->
+    ``lat_dst``/``lon_dst`` (degrees on the target datum, rounded to
+    1e-6 deg ~ 0.1 m).
     """
     src, dst = h.src, h.dst
     s1 = repr(1.0 + h.s_ppm * 1e-6)
@@ -132,34 +132,6 @@ def datum_stage_exprs(h: Helmert, lat: str = "lat_src",
                      f" * 180.0 / {PI}, 6)"),
          "lon_dst": f"round(atan2(wy, wx) * 180.0 / {PI}, 6)"},
     ]
-
-
-_WORK_COLS = ("latr", "lonr", "nu", "ecx", "ecy", "ecz",
-              "wx", "wy", "wz", "pw", "uw")
-
-
-def with_datum_shift(df: DataFrame, h: Helmert = OSGB36_TO_WGS84,
-                     lat: str = "lat_src",
-                     lon: str = "lon_src") -> DataFrame:
-    """Append ``lat_dst``/``lon_dst`` (degrees on the target datum,
-    rounded to 1e-6 deg ~ 0.1 m). Native expressions only — the whole
-    chain fuses into one codegen stage; nothing shuffles."""
-    out = df
-    for stage in datum_stage_exprs(h, lat, lon):
-        out = out.withColumns({k: F.expr(v) for k, v in stage.items()})
-    return out.drop(*_WORK_COLS)
-
-
-def sql_datum_chain(inner_sql: str, h: Helmert = OSGB36_TO_WGS84,
-                    lat: str = "lat_src", lon: str = "lon_src") -> str:
-    """DuckDB mirror: wrap ``inner_sql`` (producing ``lat``/``lon``) so
-    the outer SELECT adds lat_dst/lon_dst — same generated stages."""
-    sel = f"SELECT * FROM ({inner_sql})"
-    for stage in datum_stage_exprs(h, lat, lon):
-        cols = ", ".join(f"({v}) AS {k}" for k, v in stage.items())
-        sel = f"SELECT *, {cols} FROM ({sel})"
-    drop = ", ".join(_WORK_COLS)
-    return f"SELECT * EXCLUDE ({drop}) FROM ({sel})"
 
 
 def datum_shift_scalar(h: Helmert, lat_deg: float,

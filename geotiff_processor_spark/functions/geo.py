@@ -139,9 +139,14 @@ def sql_mercator_y(lat: str) -> str:
 
 
 def sql_tile_y(lat: str, zoom: int) -> str:
-    """XYZ tile row at `zoom` via Web-Mercator (slippy-map convention)."""
+    """XYZ tile row at `zoom` via Web-Mercator (slippy-map convention).
+
+    At the south pole ``tan`` is exactly 0, whose ``ln`` is NULL in Spark
+    and an error in DuckDB; flooring it at 1e-300 puts the pole in the
+    last row, with the latitudes just north of it."""
     n = 1 << zoom
-    yn = f"((1.0 - ln(tan(pi()/4 + radians({lat})/2)) / pi()) / 2.0)"
+    t = f"greatest(tan(pi()/4 + radians({lat})/2), cast(1e-300 as double))"
+    yn = f"((1.0 - ln({t}) / pi()) / 2.0)"
     return f"cast({_sql_clamp(lat, f'floor({yn} * {n})', n - 1)} as bigint)"
 
 

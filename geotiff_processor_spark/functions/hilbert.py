@@ -16,14 +16,15 @@ Algorithm: the standard xy2d bit-interleave walk (public domain, the
 form given in Hamilton's & Wikipedia's "Hilbert curve" references):
 for each scale s = 2^(L-1) .. 1 extract quadrant bits (rx, ry), add
 s^2 * gray(rx, ry) to d, then rotate/reflect the lower bits. The loop
-is UNROLLED at plan-build time into L chained select stages of pure
-integer CASE arithmetic — native JVM-side whole-stage codegen in
-Spark, and the IDENTICAL generated text runs in DuckDB as the oracle
-(the repo's one-formula-two-engines rule). No UDF anywhere; a numpy
-mirror exists for tests and Arrow pipelines.
+is UNROLLED at plan-build time into a stage list (``hilbert_stages``)
+of pure integer CASE arithmetic, one stage per scale; functions/stages.py
+renders it as native JVM-side whole-stage codegen in Spark and as the
+IDENTICAL generated text in DuckDB, the oracle (the repo's
+one-formula-two-engines rule). No UDF anywhere; a numpy mirror exists
+for tests and Arrow pipelines.
 
 Reference analog: the reference's tile grid / overview walk
-(``/root/reference/params.py:27``) enumerates tiles row-major; this
+(its ``params.py:27``) enumerates tiles row-major; this
 module is the scale-first replacement ordering.
 """
 
@@ -33,6 +34,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .stages import Stages
+
 DEFAULT_LEVEL = 8
 
 
@@ -40,19 +43,23 @@ DEFAULT_LEVEL = 8
 # dialect-neutral SQL (valid in Spark SQL and DuckDB)
 # ---------------------------------------------------------------------------
 
-def hilbert_step_exprs(level: int) -> list[tuple[str, str, str]]:
-    """Per-scale update expressions for the unrolled xy2d walk.
+def hilbert_stages(xq: str, yq: str,
+                   level: int = DEFAULT_LEVEL) -> Stages:
+    """Stage list: the Hilbert curve position of integer grid coords
+    ``xq``/``yq`` (each in [0, 2^level)) as ``hilbert_d``.
 
-    Returns one (d_expr, x_expr, y_expr) triple per scale; each
-    references columns ``hd``, ``hx``, ``hy`` holding the previous
-    stage's state. gray(rx, ry) = (3*rx) XOR ry, written as a CASE so
-    the same text parses in both engines (DuckDB spells xor as a
-    function, Spark as an operator); the reflection uses n-1 (a pure
-    bit-flip for power-of-two n, so higher bits never leak into the
-    smaller scales examined later).
+    Columns ``hd``, ``hx``, ``hy`` hold the walk's state; each scale's
+    stage redefines all three from the previous stage's values.
+    gray(rx, ry) = (3*rx) XOR ry, written as a CASE so the same text
+    parses in both engines (DuckDB spells xor as a function, Spark as an
+    operator); the reflection uses n-1 (a pure bit-flip for power-of-two
+    n, so higher bits never leak into the smaller scales examined
+    later). Every stage is native integer CASE arithmetic; nothing
+    leaves the JVM and nothing shuffles.
     """
     n1 = (1 << level) - 1
-    steps = []
+    stages = [{"hd": "cast(0 as bigint)", "hx": f"cast({xq} as bigint)",
+               "hy": f"cast({yq} as bigint)"}]
     for k in range(level):
         s = 1 << (level - 1 - k)
         rx = f"(hx & {s}) > 0"
@@ -60,53 +67,15 @@ def hilbert_step_exprs(level: int) -> list[tuple[str, str, str]]:
         quad = (f"CASE WHEN NOT ({rx}) AND NOT ({ry}) THEN 0 "
                 f"WHEN NOT ({rx}) THEN 1 "
                 f"WHEN NOT ({ry}) THEN 3 ELSE 2 END")
-        d_expr = f"hd + {s * s} * ({quad})"
-        x_expr = (f"CASE WHEN {ry} THEN hx "
-                  f"WHEN {rx} THEN {n1} - hy ELSE hy END")
-        y_expr = (f"CASE WHEN {ry} THEN hy "
-                  f"WHEN {rx} THEN {n1} - hx ELSE hx END")
-        steps.append((d_expr, x_expr, y_expr))
-    return steps
-
-
-def sql_hilbert_chain(inner_sql: str, xq: str, yq: str,
-                      level: int = DEFAULT_LEVEL) -> str:
-    """Wrap ``inner_sql`` (a SELECT producing columns ``{xq}``/``{yq}``
-    in [0, 2^level)) in the unrolled walk; the outermost SELECT exposes
-    every inner column plus ``hilbert_d``. DuckDB-side mirror of
-    :func:`with_hilbert` — generated from the same step emitter.
-    """
-    sel = (f"SELECT *, cast(0 as bigint) AS hd, "
-           f"cast({xq} as bigint) AS hx, cast({yq} as bigint) AS hy "
-           f"FROM ({inner_sql})")
-    for d_expr, x_expr, y_expr in hilbert_step_exprs(level):
-        sel = (f"SELECT * EXCLUDE (hd, hx, hy), ({d_expr}) AS hd, "
-               f"({x_expr}) AS hx, ({y_expr}) AS hy FROM ({sel})")
-    return (f"SELECT * EXCLUDE (hd, hx, hy), hd AS hilbert_d "
-            f"FROM ({sel})")
-
-
-def with_hilbert(df: DataFrame, xq_col: str, yq_col: str,
-                 level: int = DEFAULT_LEVEL,
-                 out_col: str = "hilbert_d") -> DataFrame:
-    """Append the Hilbert curve position of integer grid coords
-    ``xq_col``/``yq_col`` (each in [0, 2^level)) as ``out_col``.
-
-    Pure chained select stages over the SAME generated expressions the
-    oracle runs — every stage is native integer CASE arithmetic inside
-    whole-stage codegen; nothing leaves the JVM and nothing shuffles.
-    """
-    out = df.withColumns({
-        "hd": F.lit(0).cast("bigint"),
-        "hx": F.col(xq_col).cast("bigint"),
-        "hy": F.col(yq_col).cast("bigint"),
-    })
-    for d_expr, x_expr, y_expr in hilbert_step_exprs(level):
-        out = out.withColumns({
-            "hd": F.expr(d_expr), "hx": F.expr(x_expr),
-            "hy": F.expr(y_expr),
+        stages.append({
+            "hd": f"hd + {s * s} * ({quad})",
+            "hx": (f"CASE WHEN {ry} THEN hx "
+                   f"WHEN {rx} THEN {n1} - hy ELSE hy END"),
+            "hy": (f"CASE WHEN {ry} THEN hy "
+                   f"WHEN {rx} THEN {n1} - hx ELSE hx END"),
         })
-    return out.withColumn(out_col, F.col("hd")).drop("hd", "hx", "hy")
+    stages.append({"hilbert_d": "hd"})
+    return stages
 
 
 # ---------------------------------------------------------------------------

@@ -1,17 +1,21 @@
-"""Arbitrary-CRS reprojection: UTM (transverse Mercator) -> lon/lat.
+"""Arbitrary-CRS reprojection: projected metres -> lon/lat.
 
-The reference ingests any EPSG code via ``osr.SpatialReference``
-(``/root/reference/helpers.py:45-48``) and warps rasters to EPSG:3857
-(``/root/reference/export_formats/geoserverDEM.py:34-38``).  This module
-is the engine's analog for a non-4326 source CRS: a closed-form inverse
-transverse-Mercator (UTM grid) using the Krueger n-series truncated at
-n^3 (public-domain formulation, sub-millimetre within a UTM zone).
+The reference ingests any EPSG code via ``osr.SpatialReference`` (its
+``helpers.py:45-48``) and warps rasters to EPSG:3857
+(``export_formats/geoserverDEM.py:34-38``). This module is the engine's
+analog for a non-4326 source CRS: closed-form inverses for five families
+(transverse Mercator on UTM grids via the Krueger n-series truncated at
+n^3, Lambert conformal conic, south polar stereographic, spherical Web
+Mercator and Albers equal-area conic), dispatched from EPSG codes by
+``reproject_epsg``.
 
 Design rules shared with functions/geo.py:
 
 * every formula exists ONCE as dialect-neutral SQL text (valid in Spark
-  SQL and DuckDB) so the engine and the differential oracle evaluate the
-  same expression tree;
+  SQL and DuckDB); each family writes its stage order once, as a stage
+  list (``utm_stages`` .. ``albers_stages``) that functions/stages.py
+  renders for Spark (``with_stages``) and for the DuckDB oracle
+  (``sql_stages``), so both evaluate the same expression tree;
 * no engine-builtin ``degrees``/``radians``/``pi`` or ``sinh``/``cosh``
   — those may differ between libm implementations and in constant
   association; instead RAD2DEG is inlined as one repr'd double and
@@ -20,13 +24,12 @@ Design rules shared with functions/geo.py:
 * all series constants are computed once in Python and inlined via
   ``repr`` (17 significant digits — both engines parse to the same
   IEEE-754 double);
-* the hot path is native expressions (whole-stage codegen); an
-  Arrow-vectorized pandas UDF variant exists for the north-rule's batch
-  UDF requirement and is differential-tested against the SQL path.
+* the known families run as native expressions (whole-stage codegen);
+  only an EPSG code outside them goes through a pyproj Arrow UDF.
 
-The forward transform (lon/lat -> UTM) exists numpy-only: it is used by
-tests to prove the inverse is a true round-trip, mirroring how the
-reference trusts GDAL's warp and we trust a self-inverse pair.
+Each family has numpy mirrors: the forward transforms are the test-side
+ground truth that proves each SQL inverse is a true round-trip, mirroring
+how the reference trusts GDAL's warp and we trust a self-inverse pair.
 """
 
 from __future__ import annotations
@@ -37,6 +40,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .stages import Stages, with_stages
 
 # UTM grid constants (shared by every ellipsoid)
 K0 = 0.9996
@@ -176,42 +181,27 @@ def sql_utm_lon(xip: str, etap: str, zone: int) -> str:
             f" + atan({_sql_sinh(etap)} / cos({xip})) * {_d(RAD2DEG)})")
 
 
-def utm_inverse_cte(src: str, id_cols: list[str],
-                    easting: str = "e_utm", northing: str = "n_utm",
-                    zone: int = 21, south: bool = True,
-                    round_digits: int = 6,
-                    ell: TMEllipsoid = WGS84_ELL) -> str:
-    """CTE chain ``u1 .. utm_ll``: UTM coords in `src` -> lon/lat degrees.
+def utm_stages(easting: str = "e_utm", northing: str = "n_utm",
+               zone: int = 21, south: bool = True,
+               round_digits: int = 6,
+               ell: TMEllipsoid = WGS84_ELL) -> Stages:
+    """Stage list: UTM coords -> lon/lat degrees (rounded).
 
-    Identical text runs in Spark SQL and DuckDB; rounding to
-    `round_digits` absorbs last-ulp libm differences in sin/cos/asin/
-    atan/exp between the JVM and DuckDB while exceeding the milli-degree
-    grid resolution of the engine's cell index.
+    Rounding to `round_digits` absorbs last-ulp libm differences in
+    sin/cos/asin/atan/exp between the JVM and DuckDB while exceeding the
+    milli-degree grid resolution of the engine's cell index. ``ell``
+    picks the datum family (WGS84 default; GRS80_ELL for
+    ETRS89/GDA94/NAD83 grids).
     """
-    ids = ", ".join(id_cols)
-    return f"""u1 AS (
-  SELECT {ids}, {easting}, {northing},
-    {sql_utm_xi(northing, south, ell)} AS xi,
-    {sql_utm_eta(easting, ell)} AS eta
-  FROM {src}
-),
-u2 AS (
-  SELECT {ids}, {easting}, {northing},
-    {sql_utm_xip('xi', 'eta', ell)} AS xip,
-    {sql_utm_etap('xi', 'eta', ell)} AS etap
-  FROM u1
-),
-u3 AS (
-  SELECT {ids}, {easting}, {northing}, xip, etap,
-    {sql_utm_chi('xip', 'etap')} AS chi
-  FROM u2
-),
-utm_ll AS (
-  SELECT {ids}, {easting}, {northing},
-    round({sql_utm_lon('xip', 'etap', zone)}, {round_digits}) AS lon,
-    round({sql_utm_lat('chi', ell)}, {round_digits}) AS lat
-  FROM u3
-)"""
+    return [
+        {"xi": sql_utm_xi(northing, south, ell),
+         "eta": sql_utm_eta(easting, ell)},
+        {"xip": sql_utm_xip("xi", "eta", ell),
+         "etap": sql_utm_etap("xi", "eta", ell)},
+        {"chi": sql_utm_chi("xip", "etap")},
+        {"lon": f"round({sql_utm_lon('xip', 'etap', zone)}, {round_digits})",
+         "lat": f"round({sql_utm_lat('chi', ell)}, {round_digits})"},
+    ]
 
 
 # deterministic UTM-coordinate synthesis from an integer id `i`
@@ -222,40 +212,7 @@ SQL_UTM_NORTHING = "(4000000 + (i * 104729) % 5000000)"
 
 
 # ---------------------------------------------------------------------------
-# Spark operator (native exprs — whole-stage codegen path)
-# ---------------------------------------------------------------------------
-
-def reproject_utm(df: DataFrame, easting: str = "e_utm",
-                  northing: str = "n_utm", zone: int = 21,
-                  south: bool = True,
-                  round_digits: int = 6,
-                  ell: TMEllipsoid = WGS84_ELL) -> DataFrame:
-    """Append lon/lat (degrees, rounded) to a DataFrame of UTM coords.
-
-    Stages mirror `utm_inverse_cte` exactly (same expression text per
-    stage) so the operator and the oracle evaluate the same double
-    operations in the same order. ``ell`` picks the datum family
-    (WGS84 default; GRS80_ELL for ETRS89/GDA94/NAD83 grids).
-    """
-    return (
-        df.withColumn("xi", F.expr(sql_utm_xi(northing, south, ell)))
-        .withColumn("eta", F.expr(sql_utm_eta(easting, ell)))
-        .withColumn("xip", F.expr(sql_utm_xip("xi", "eta", ell)))
-        .withColumn("etap", F.expr(sql_utm_etap("xi", "eta", ell)))
-        .withColumn("chi", F.expr(sql_utm_chi("xip", "etap")))
-        .withColumn(
-            "lon",
-            F.expr(f"round({sql_utm_lon('xip', 'etap', zone)},"
-                   f" {round_digits})"))
-        .withColumn(
-            "lat", F.expr(f"round({sql_utm_lat('chi', ell)},"
-                          f" {round_digits})"))
-        .drop("xi", "eta", "xip", "etap", "chi")
-    )
-
-
-# ---------------------------------------------------------------------------
-# numpy mirrors (Arrow pandas UDF + round-trip ground truth for tests)
+# numpy mirrors (round-trip ground truth for tests)
 # ---------------------------------------------------------------------------
 
 def np_utm_inverse(e: np.ndarray, n: np.ndarray, zone: int = 21,
@@ -382,68 +339,28 @@ def sql_lcc_chi(rho: str, lat1: float, lat2: float, lat0: float) -> str:
     return f"({_d(HALF_PI)} - 2 * atan({tp}))"
 
 
-def lcc_inverse_cte(src: str, id_cols: list[str],
-                    x: str = "x_lcc", y: str = "y_lcc",
-                    lat1: float = LCC_SA["lat1"],
-                    lat2: float = LCC_SA["lat2"],
-                    lat0: float = LCC_SA["lat0"],
-                    lon0: float = LCC_SA["lon0"],
-                    fe: float = LCC_SA["fe"], fn: float = LCC_SA["fn"],
-                    round_digits: int = 6) -> str:
-    """CTE chain ``l1 .. lcc_ll``: LCC metres -> lon/lat degrees.
-    Identical text runs in Spark SQL and DuckDB (same rationale as
-    utm_inverse_cte)."""
-    ids = ", ".join(id_cols)
-    return f"""l1 AS (
-  SELECT {ids}, {x}, {y},
-    {sql_lcc_rho(x, y, lat1, lat2, lat0, fe, fn)} AS rho,
-    {sql_lcc_theta(x, y, lat1, lat2, lat0, fe, fn)} AS theta
-  FROM {src}
-),
-l2 AS (
-  SELECT {ids}, {x}, {y}, theta,
-    {sql_lcc_chi('rho', lat1, lat2, lat0)} AS chi
-  FROM l1
-),
-lcc_ll AS (
-  SELECT {ids}, {x}, {y},
-    round({sql_lcc_lon('theta', lat1, lat2, lat0, lon0)},
-          {round_digits}) AS lon,
-    round({sql_utm_lat('chi')}, {round_digits}) AS lat
-  FROM l2
-)"""
+def lcc_stages(x: str = "x_lcc", y: str = "y_lcc",
+               lat1: float = LCC_SA["lat1"],
+               lat2: float = LCC_SA["lat2"],
+               lat0: float = LCC_SA["lat0"],
+               lon0: float = LCC_SA["lon0"],
+               fe: float = LCC_SA["fe"], fn: float = LCC_SA["fn"],
+               round_digits: int = 6) -> Stages:
+    """Stage list: LCC metres -> lon/lat degrees (rounded)."""
+    return [
+        {"rho": sql_lcc_rho(x, y, lat1, lat2, lat0, fe, fn),
+         "theta": sql_lcc_theta(x, y, lat1, lat2, lat0, fe, fn)},
+        {"chi": sql_lcc_chi("rho", lat1, lat2, lat0)},
+        {"lon": (f"round({sql_lcc_lon('theta', lat1, lat2, lat0, lon0)},"
+                 f" {round_digits})"),
+         "lat": f"round({sql_utm_lat('chi')}, {round_digits})"},
+    ]
 
 
 # deterministic LCC-coordinate synthesis from an integer id `i`
 # (a ~3200 x 3200 km box around the South America LCC origin)
 SQL_LCC_X = "((i * 7919) % 3200000 - 1600000)"
 SQL_LCC_Y = "((i * 104729) % 3200000 - 1600000)"
-
-
-def reproject_lcc(df: DataFrame, x: str = "x_lcc", y: str = "y_lcc",
-                  lat1: float = LCC_SA["lat1"],
-                  lat2: float = LCC_SA["lat2"],
-                  lat0: float = LCC_SA["lat0"],
-                  lon0: float = LCC_SA["lon0"],
-                  fe: float = LCC_SA["fe"], fn: float = LCC_SA["fn"],
-                  round_digits: int = 6) -> DataFrame:
-    """Append lon/lat (degrees, rounded) to a DataFrame of LCC coords —
-    native expressions only (whole-stage codegen), stage-for-stage the
-    same text as ``lcc_inverse_cte``."""
-    return (
-        df.withColumn("rho",
-                      F.expr(sql_lcc_rho(x, y, lat1, lat2, lat0, fe, fn)))
-        .withColumn("theta",
-                    F.expr(sql_lcc_theta(x, y, lat1, lat2, lat0, fe, fn)))
-        .withColumn("chi", F.expr(sql_lcc_chi("rho", lat1, lat2, lat0)))
-        .withColumn(
-            "lon",
-            F.expr(f"round({sql_lcc_lon('theta', lat1, lat2, lat0, lon0)},"
-                   f" {round_digits})"))
-        .withColumn(
-            "lat", F.expr(f"round({sql_utm_lat('chi')}, {round_digits})"))
-        .drop("rho", "theta", "chi")
-    )
 
 
 def np_lcc_forward(lon: np.ndarray, lat: np.ndarray,
@@ -529,26 +446,18 @@ def sql_ps_lon(x: str, y: str, lon0: float, fe: float, fn: float) -> str:
     return f"({_d(lon0)} + atan2({xp}, {yp}) * {_d(RAD2DEG)})"
 
 
-def ps_inverse_cte(src: str, id_cols: list[str],
-                   x: str = "x_ps", y: str = "y_ps",
-                   lat_ts: float = PS_SOUTH["lat_ts"],
-                   lon0: float = PS_SOUTH["lon0"],
-                   fe: float = PS_SOUTH["fe"], fn: float = PS_SOUTH["fn"],
-                   round_digits: int = 6) -> str:
-    """CTE chain ``p1 .. ps_ll``: south-polar-stereographic metres ->
-    lon/lat degrees; identical text runs in Spark SQL and DuckDB."""
-    ids = ", ".join(id_cols)
-    return f"""p1 AS (
-  SELECT {ids}, {x}, {y},
-    {sql_ps_chi(sql_ps_rho(x, y, fe, fn), lat_ts)} AS chi
-  FROM {src}
-),
-ps_ll AS (
-  SELECT {ids}, {x}, {y},
-    round({sql_ps_lon(x, y, lon0, fe, fn)}, {round_digits}) AS lon,
-    round({sql_utm_lat('chi')}, {round_digits}) AS lat
-  FROM p1
-)"""
+def ps_stages(x: str = "x_ps", y: str = "y_ps",
+              lat_ts: float = PS_SOUTH["lat_ts"],
+              lon0: float = PS_SOUTH["lon0"],
+              fe: float = PS_SOUTH["fe"], fn: float = PS_SOUTH["fn"],
+              round_digits: int = 6) -> Stages:
+    """Stage list: south-polar-stereographic metres -> lon/lat degrees
+    (rounded)."""
+    return [
+        {"chi": sql_ps_chi(sql_ps_rho(x, y, fe, fn), lat_ts)},
+        {"lon": f"round({sql_ps_lon(x, y, lon0, fe, fn)}, {round_digits})",
+         "lat": f"round({sql_utm_lat('chi')}, {round_digits})"},
+    ]
 
 
 # deterministic polar-stereographic synthesis from an integer id `i`
@@ -556,27 +465,6 @@ ps_ll AS (
 # +37/+59 offsets so atan2(0, 0) never arises)
 SQL_PS_X = "((i * 7919 + 37) % 5000000 - 2500000)"
 SQL_PS_Y = "((i * 104729 + 59) % 5000000 - 2500000)"
-
-
-def reproject_ps(df: DataFrame, x: str = "x_ps", y: str = "y_ps",
-                 lat_ts: float = PS_SOUTH["lat_ts"],
-                 lon0: float = PS_SOUTH["lon0"],
-                 fe: float = PS_SOUTH["fe"], fn: float = PS_SOUTH["fn"],
-                 round_digits: int = 6) -> DataFrame:
-    """Append lon/lat (degrees, rounded) to a DataFrame of south-polar
-    stereographic coords — native expressions only (whole-stage
-    codegen), stage-for-stage the same text as ``ps_inverse_cte``."""
-    return (
-        df.withColumn(
-            "chi", F.expr(sql_ps_chi(sql_ps_rho(x, y, fe, fn), lat_ts)))
-        .withColumn(
-            "lon",
-            F.expr(f"round({sql_ps_lon(x, y, lon0, fe, fn)},"
-                   f" {round_digits})"))
-        .withColumn(
-            "lat", F.expr(f"round({sql_utm_lat('chi')}, {round_digits})"))
-        .drop("chi")
-    )
 
 
 def np_ps_forward(lon: np.ndarray, lat: np.ndarray,
@@ -635,31 +523,11 @@ def sql_merc_lat(y: str) -> str:
             f" * {_d(RAD2DEG)})")
 
 
-def reproject_merc(df: DataFrame, x: str = "x_merc", y: str = "y_merc",
-                   round_digits: int = 6) -> DataFrame:
-    """Append lon/lat (degrees, rounded) to a DataFrame of EPSG:3857
-    coords — native expressions only (whole-stage codegen)."""
-    return (
-        df.withColumn(
-            "lon", F.expr(f"round({sql_merc_lon(x)}, {round_digits})"))
-        .withColumn(
-            "lat", F.expr(f"round({sql_merc_lat(y)}, {round_digits})"))
-    )
-
-
-def merc_inverse_cte(src: str, id_cols: list[str],
-                     x: str = "x_merc", y: str = "y_merc",
-                     round_digits: int = 6) -> str:
-    """CTE ``merc_ll``: EPSG:3857 metres -> lon/lat degrees. Identical
-    text runs in Spark SQL and DuckDB (same rationale as
-    utm_inverse_cte)."""
-    ids = ", ".join(id_cols)
-    return f"""merc_ll AS (
-  SELECT {ids}, {x}, {y},
-    round({sql_merc_lon(x)}, {round_digits}) AS lon,
-    round({sql_merc_lat(y)}, {round_digits}) AS lat
-  FROM {src}
-)"""
+def merc_stages(x: str = "x_merc", y: str = "y_merc",
+                round_digits: int = 6) -> Stages:
+    """Stage list: EPSG:3857 metres -> lon/lat degrees (rounded)."""
+    return [{"lon": f"round({sql_merc_lon(x)}, {round_digits})",
+             "lat": f"round({sql_merc_lat(y)}, {round_digits})"}]
 
 
 # deterministic 3857-coordinate synthesis from an integer id `i`
@@ -674,147 +542,6 @@ def np_merc_forward(lon: np.ndarray, lat: np.ndarray
     lam = lon.astype(np.float64) / RAD2DEG
     phi = lat.astype(np.float64) / RAD2DEG
     return R_MERC * lam, R_MERC * np.log(np.tan(HALF_PI / 2.0 + phi / 2.0))
-
-
-# ---------------------------------------------------------------------------
-# EPSG dispatch — the reference's accept-any-code surface
-# (/root/reference/helpers.py:45-48 feeds any EPSG into
-# osr.SpatialReference). Known families route to the closed-form native
-# expression paths above (whole-stage codegen, oracle-checked); every
-# other code falls back to a pyproj-backed Arrow pandas UDF, gated on
-# import so the engine degrades with a clear message where the library
-# is absent rather than silently mis-projecting.
-# ---------------------------------------------------------------------------
-
-# Published parameter sets for common Lambert-conformal-conic CRSs
-# (EPSG registry values; both sit on GRS80 — see reproject_epsg note).
-LCC_EPSG = {
-    2154: {"lat1": 49.0, "lat2": 44.0, "lat0": 46.5, "lon0": 3.0,
-           "fe": 700000.0, "fn": 6600000.0},   # RGF93 / Lambert-93
-    3978: {"lat1": 49.0, "lat2": 77.0, "lat0": 49.0, "lon0": -95.0,
-           "fe": 0.0, "fn": 0.0},              # NAD83 / Canada Atlas
-}
-
-
-def reproject_epsg(df: DataFrame, epsg: int, x: str, y: str,
-                   round_digits: int = 6) -> DataFrame:
-    """Append lon/lat for source coordinates in the given EPSG CRS.
-
-    Native closed-form dispatch (no UDF, single codegen projection):
-      - 32601-32660: WGS84 / UTM zone N (north)
-      - 32701-32760: WGS84 / UTM zone N (south)
-      - 25828-25838: ETRS89 / UTM zone N (GRS80, north)
-      - 26901-26923: NAD83 / UTM zone N (GRS80, north)
-      - 28348-28358: GDA94 / MGA zone N (GRS80, south)
-      - 7846-7859: GDA2020 / MGA zone N (GRS80, south; same grid
-        definition as GDA94 MGA — the datum-frame shift is a plate
-        motion model outside a coordinate-only transform's scope)
-      - 23028-23038: ED50 / UTM zone N (International 1924, north)
-      - 3031: WGS84 / Antarctic Polar Stereographic (lat_ts -71, lon0 0)
-      - 3857: spherical (Web) Mercator — the reference's target CRS
-      - LCC_EPSG registry (2154 Lambert-93, 3978 Canada Atlas): Lambert
-        conformal conic with published parameters. These CRSs sit on
-        GRS80; the LCC series here uses WGS84 flattening — the
-        ellipsoids differ by ~1e-9 in 1/f (sub-0.1 mm on the ground),
-        far inside the round_digits=6 (~0.1 m) output quantum. (The
-        UTM family above does carry the true GRS80 constants.)
-      - 5070: NAD83 / Conus Albers equal-area (GRS80) — the standard
-        US analysis grid
-      - 4326: passthrough (source already lon/lat)
-    Anything else: pyproj Arrow UDF (``make_pyproj_inverse_pandas_udf``).
-    """
-    if epsg == 5070:
-        return reproject_albers(df, x, y, round_digits=round_digits)
-    if epsg in LCC_EPSG:
-        return reproject_lcc(df, x, y, round_digits=round_digits,
-                             **LCC_EPSG[epsg])
-    if epsg == 3857:
-        return reproject_merc(df, x, y, round_digits=round_digits)
-    if 32601 <= epsg <= 32660:
-        return reproject_utm(df, x, y, zone=epsg - 32600, south=False,
-                             round_digits=round_digits)
-    if 32701 <= epsg <= 32760:
-        return reproject_utm(df, x, y, zone=epsg - 32700, south=True,
-                             round_digits=round_digits)
-    if 25828 <= epsg <= 25838:  # ETRS89 / UTM
-        return reproject_utm(df, x, y, zone=epsg - 25800, south=False,
-                             round_digits=round_digits, ell=GRS80_ELL)
-    if 26901 <= epsg <= 26923:  # NAD83 / UTM
-        return reproject_utm(df, x, y, zone=epsg - 26900, south=False,
-                             round_digits=round_digits, ell=GRS80_ELL)
-    if 28348 <= epsg <= 28358:  # GDA94 / MGA
-        return reproject_utm(df, x, y, zone=epsg - 28300, south=True,
-                             round_digits=round_digits, ell=GRS80_ELL)
-    if 7846 <= epsg <= 7859:  # GDA2020 / MGA
-        return reproject_utm(df, x, y, zone=epsg - 7800, south=True,
-                             round_digits=round_digits, ell=GRS80_ELL)
-    if 23028 <= epsg <= 23038:  # ED50 / UTM (International 1924)
-        return reproject_utm(df, x, y, zone=epsg - 23000, south=False,
-                             round_digits=round_digits,
-                             ell=INTL1924_ELL)
-    if epsg == 3031:
-        return reproject_ps(df, x, y, round_digits=round_digits)
-    if epsg == 4326:
-        return df.withColumn(
-            "lon", F.round(F.col(x).cast("double"), round_digits)
-        ).withColumn(
-            "lat", F.round(F.col(y).cast("double"), round_digits))
-    udf = make_pyproj_inverse_pandas_udf(epsg, round_digits)
-    return (
-        df.withColumn("_ll", udf(F.col(x), F.col(y)))
-        .withColumn("lon", F.col("_ll.lon"))
-        .withColumn("lat", F.col("_ll.lat"))
-        .drop("_ll")
-    )
-
-
-def make_pyproj_inverse_pandas_udf(epsg: int, round_digits: int = 6):
-    """Arrow-vectorized pandas UDF projecting EPSG:<code> -> lon/lat via
-    pyproj. The Transformer is built lazily INSIDE the UDF (once per
-    executor process, cached in the closure) because pyproj handles
-    don't pickle; batches then reuse it. Raises NotImplementedError at
-    plan-build time when pyproj is not installed, naming the native
-    families that need no library."""
-    try:
-        import pyproj  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            f"EPSG:{epsg} needs pyproj (not installed); closed-form "
-            "native support exists for UTM 326xx/327xx, polar "
-            "stereographic 3031, and lon/lat 4326") from e
-
-    state: dict = {}
-
-    @F.pandas_udf("struct<lon: double, lat: double>")
-    def pyproj_inverse_udf(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
-        import pyproj as _pp
-        if "t" not in state:
-            state["t"] = _pp.Transformer.from_crs(
-                f"EPSG:{epsg}", "EPSG:4326", always_xy=True)
-        lon, lat = state["t"].transform(
-            xs.to_numpy(np.float64), ys.to_numpy(np.float64))
-        return pd.DataFrame({"lon": np.round(lon, round_digits),
-                             "lat": np.round(lat, round_digits)})
-
-    return pyproj_inverse_udf
-
-
-def make_utm_inverse_pandas_udf(zone: int = 21, south: bool = True,
-                                round_digits: int = 6):
-    """Arrow-vectorized pandas UDF returning struct<lon,lat> — the
-    north-rule's batch-UDF path; differential-tested against the native
-    expression path."""
-
-    @F.pandas_udf("struct<lon: double, lat: double>")
-    def utm_inverse_udf(e: pd.Series, n: pd.Series) -> pd.DataFrame:
-        lon, lat = np_utm_inverse(
-            e.to_numpy(np.float64), n.to_numpy(np.float64), zone, south)
-        return pd.DataFrame({
-            "lon": np.round(lon, round_digits),
-            "lat": np.round(lat, round_digits),
-        })
-
-    return utm_inverse_udf
 
 
 # ---------------------------------------------------------------------------
@@ -919,54 +646,23 @@ def sql_albers_lon(theta: str, params: dict | None = None) -> str:
     return f"({_d(p['lon0'])} + ({theta} / {_d(n)}) * {_d(RAD2DEG)})"
 
 
-def albers_inverse_cte(src: str, id_cols: list[str],
-                       x: str = "x_alb", y: str = "y_alb",
-                       params: dict | None = None,
-                       round_digits: int = 6) -> str:
-    """CTE chain ``a1 .. alb_ll``: Albers metres -> lon/lat degrees;
-    identical text in Spark SQL and DuckDB."""
-    ids = ", ".join(id_cols)
+def albers_stages(x: str = "x_alb", y: str = "y_alb",
+                  params: dict | None = None,
+                  round_digits: int = 6) -> Stages:
+    """Stage list: Albers metres -> lon/lat degrees (rounded)."""
     rho, theta = sql_albers_rho_theta(x, y, params)
-    return f"""a1 AS (
-  SELECT {ids}, {x}, {y}, {rho} AS rho, {theta} AS theta
-  FROM {src}
-),
-a2 AS (
-  SELECT {ids}, {x}, {y}, theta,
-    {sql_albers_q('rho', params)} AS q
-  FROM a1
-),
-alb_ll AS (
-  SELECT {ids}, {x}, {y},
-    round({sql_albers_lon('theta', params)}, {round_digits}) AS lon,
-    round({sql_albers_lat('q', params)}, {round_digits}) AS lat
-  FROM a2
-)"""
+    return [
+        {"rho": rho, "theta": theta},
+        {"q": sql_albers_q("rho", params)},
+        {"lon": f"round({sql_albers_lon('theta', params)}, {round_digits})",
+         "lat": f"round({sql_albers_lat('q', params)}, {round_digits})"},
+    ]
 
 
 # deterministic Albers-coordinate synthesis from an integer id `i`
 # (a CONUS-sized box in EPSG:5070 metres)
 SQL_ALB_X = "((i * 7919) % 4000000 - 2000000)"
 SQL_ALB_Y = "((i * 104729) % 2800000 + 300000)"
-
-
-def reproject_albers(df: DataFrame, x: str = "x_alb", y: str = "y_alb",
-                     params: dict | None = None,
-                     round_digits: int = 6) -> DataFrame:
-    """Append lon/lat (degrees, rounded) to a DataFrame of Albers
-    coords — native expressions only, stage-for-stage the same text as
-    ``albers_inverse_cte``."""
-    rho, theta = sql_albers_rho_theta(x, y, params)
-    return (
-        df.withColumn("rho", F.expr(rho))
-        .withColumn("theta", F.expr(theta))
-        .withColumn("q", F.expr(sql_albers_q("rho", params)))
-        .withColumn("lon", F.expr(
-            f"round({sql_albers_lon('theta', params)}, {round_digits})"))
-        .withColumn("lat", F.expr(
-            f"round({sql_albers_lat('q', params)}, {round_digits})"))
-        .drop("rho", "theta", "q")
-    )
 
 
 def np_albers_forward(lon: np.ndarray, lat: np.ndarray,
@@ -990,3 +686,113 @@ def np_albers_forward(lon: np.ndarray, lat: np.ndarray,
     xo = p["fe"] + rho * np.sin(theta)
     yo = p["fn"] + rho0 - rho * np.cos(theta)
     return xo, yo
+
+
+# ---------------------------------------------------------------------------
+# EPSG dispatch — the reference's accept-any-code surface (its
+# helpers.py:45-48 feeds any EPSG into osr.SpatialReference). Known
+# families route to the closed-form stage lists above (whole-stage
+# codegen, oracle-checked); every other code falls back to a
+# pyproj-backed Arrow pandas UDF, gated on import so the engine degrades
+# with a clear message where the library is absent rather than silently
+# mis-projecting.
+# ---------------------------------------------------------------------------
+
+# Published parameter sets for common Lambert-conformal-conic CRSs
+# (EPSG registry values). Both sit on GRS80; the LCC series here uses
+# WGS84 flattening — the ellipsoids differ by ~1e-9 in 1/f (sub-0.1 mm on
+# the ground), far inside the round_digits=6 (~0.1 m) output quantum.
+# (The UTM family does carry the true GRS80 constants.)
+LCC_EPSG = {
+    2154: {"lat1": 49.0, "lat2": 44.0, "lat0": 46.5, "lon0": 3.0,
+           "fe": 700000.0, "fn": 6600000.0},   # RGF93 / Lambert-93
+    3978: {"lat1": 49.0, "lat2": 77.0, "lat0": 49.0, "lon0": -95.0,
+           "fe": 0.0, "fn": 0.0},              # NAD83 / Canada Atlas
+}
+
+
+def _lonlat_stages(x: str, y: str, round_digits: int = 6) -> Stages:
+    """Passthrough: the source is already lon/lat."""
+    return [{"lon": f"round(cast({x} as double), {round_digits})",
+             "lat": f"round(cast({y} as double), {round_digits})"}]
+
+
+# EPSG codes with a native family: (first code, last code, CRS, stage
+# list, its parameters). A UTM code's last two digits are its zone.
+# GDA2020 MGA shares GDA94's grid definition: the datum-frame shift is a
+# plate motion model outside a coordinate-only transform's scope.
+EPSG_NATIVE = (
+    (32601, 32660, "WGS84 / UTM north", utm_stages, {"south": False}),
+    (32701, 32760, "WGS84 / UTM south", utm_stages, {"south": True}),
+    (25828, 25838, "ETRS89 / UTM north", utm_stages,
+     {"south": False, "ell": GRS80_ELL}),
+    (26901, 26923, "NAD83 / UTM north", utm_stages,
+     {"south": False, "ell": GRS80_ELL}),
+    (28348, 28358, "GDA94 / MGA south", utm_stages,
+     {"south": True, "ell": GRS80_ELL}),
+    (7846, 7859, "GDA2020 / MGA south", utm_stages,
+     {"south": True, "ell": GRS80_ELL}),
+    (23028, 23038, "ED50 / UTM north", utm_stages,
+     {"south": False, "ell": INTL1924_ELL}),
+    (3031, 3031, "Antarctic Polar Stereographic", ps_stages, {}),
+    (3857, 3857, "Web Mercator", merc_stages, {}),
+    (2154, 2154, "RGF93 / Lambert-93", lcc_stages, LCC_EPSG[2154]),
+    (3978, 3978, "NAD83 / Canada Atlas Lambert", lcc_stages,
+     LCC_EPSG[3978]),
+    (5070, 5070, "NAD83 / Conus Albers", albers_stages, {}),
+    (4326, 4326, "WGS84 lon/lat", _lonlat_stages, {}),
+)
+
+
+def reproject_epsg(df: DataFrame, epsg: int, x: str, y: str,
+                   round_digits: int = 6) -> DataFrame:
+    """Append lon/lat for source coordinates in the given EPSG CRS:
+    native stages for a code in ``EPSG_NATIVE`` (no UDF, one codegen
+    projection), else the pyproj Arrow UDF
+    (``make_pyproj_inverse_pandas_udf``)."""
+    for first, last, _, family, params in EPSG_NATIVE:
+        if first <= epsg <= last:
+            if family is utm_stages:
+                params = dict(params, zone=epsg % 100)
+            return with_stages(
+                df, family(x, y, round_digits=round_digits, **params))
+    udf = make_pyproj_inverse_pandas_udf(epsg, round_digits)
+    return (
+        df.withColumn("_ll", udf(F.col(x), F.col(y)))
+        .withColumn("lon", F.col("_ll.lon"))
+        .withColumn("lat", F.col("_ll.lat"))
+        .drop("_ll")
+    )
+
+
+def make_pyproj_inverse_pandas_udf(epsg: int, round_digits: int = 6):
+    """Arrow-vectorized pandas UDF projecting EPSG:<code> -> lon/lat via
+    pyproj. The Transformer is built lazily INSIDE the UDF (once per
+    executor process, cached in the closure) because pyproj handles
+    don't pickle; batches then reuse it. Raises NotImplementedError at
+    plan-build time when pyproj is not installed, naming the native
+    codes that need no library."""
+    try:
+        import pyproj  # noqa: F401
+    except ImportError as e:
+        native = "; ".join(
+            f"{first}{'' if last == first else f'-{last}'} ({name})"
+            for first, last, name, _, _ in EPSG_NATIVE)
+        raise NotImplementedError(
+            f"EPSG:{epsg} needs pyproj (not installed); closed-form "
+            f"native support exists for {native}") from e
+
+    state: dict = {}
+
+    @F.pandas_udf("struct<lon: double, lat: double>")
+    def pyproj_inverse_udf(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
+        import pyproj as _pp
+        if "t" not in state:
+            state["t"] = _pp.Transformer.from_crs(
+                f"EPSG:{epsg}", "EPSG:4326", always_xy=True)
+        lon, lat = state["t"].transform(
+            xs.to_numpy(np.float64), ys.to_numpy(np.float64))
+        return pd.DataFrame({"lon": np.round(lon, round_digits),
+                             "lat": np.round(lat, round_digits)})
+
+    return pyproj_inverse_udf

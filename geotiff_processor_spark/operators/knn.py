@@ -282,16 +282,24 @@ def radius_join(geocoded: DataFrame, queries: DataFrame,
     # haversine still filter below, so the output is identical (the
     # cell join is a conservative superset and each pair appears once
     # — a query's three cell ids are distinct, a page has one).
+    # The page key and the band test are never NULL, so Catalyst infers
+    # no isnotnull(latm) Filter to push below geocode, where it would
+    # repeat the text parse (as in pip._cover_join; a plan test pins
+    # one parse). A page without latitude gets band key Long.MinValue:
+    # real bands lie within +-90,001, and a query band equal to it
+    # would only add pairs that the band test drops.
     qb = queries.withColumn(
         "_qband", F.floor(F.col("qlatm") / F.lit(band_mdeg)))
     qcells = qb.select(
         "*", F.explode(F.array(
             F.col("_qband") - 1, F.col("_qband"),
             F.col("_qband") + 1)).alias("_band")).drop("_qband")
+    in_band = F.abs(F.col("latm") - F.col("qlatm")) <= F.lit(band_mdeg)
     pruned = geocoded.withColumn(
-        "_band", F.floor(F.col("latm") / F.lit(band_mdeg))
+        "_band", F.coalesce(F.floor(F.col("latm") / F.lit(band_mdeg)),
+                            F.lit(-(1 << 63)))
     ).join(F.broadcast(qcells), "_band").filter(
-        F.abs(F.col("latm") - F.col("qlatm")) <= F.lit(band_mdeg))
+        F.coalesce(in_band, F.lit(False)))
     return (pruned.withColumn("dist_cm", dist)
             .filter(F.col("dist_cm") <= int(round(radius_m * 100)))
             .select("query_id", "url", "dist_cm"))

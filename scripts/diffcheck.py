@@ -31,6 +31,11 @@ import __spark_entry__ as entrymod  # noqa: E402
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs = entrymod.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print("UNKNOWN QUERIES:", unknown)
+        return 2
     spark = get_spark("diffcheck")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -39,7 +44,6 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     results: dict = {}

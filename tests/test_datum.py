@@ -6,6 +6,7 @@ import math
 import duckdb
 
 from geotiff_processor_spark.functions import datum as D
+from geotiff_processor_spark.functions.stages import sql_stages, with_stages
 from geotiff_processor_spark.testing import duck_norm, spark_norm
 
 
@@ -32,13 +33,13 @@ def test_spark_equals_duckdb_equals_scalar(spark):
     pts = [(49.8 + (i * 7919 % 1000) / 100.0,
             -7.5 + (i * 104729 % 1100) / 100.0) for i in range(400)]
     df = spark.createDataFrame(pts, "lat_src double, lon_src double")
-    out = D.with_datum_shift(df)
+    out = with_stages(df, D.datum_stages())
     sc, sr = spark_norm(out)
     con = duckdb.connect()
     con.sql("CREATE TABLE pts (lat_src DOUBLE, lon_src DOUBLE)")
     con.executemany("INSERT INTO pts VALUES (?, ?)", pts)
-    dc, dr = duck_norm(con, D.sql_datum_chain(
-        "SELECT lat_src, lon_src FROM pts"))
+    dc, dr = duck_norm(con, sql_stages(
+        "SELECT lat_src, lon_src FROM pts", D.datum_stages()))
     assert sc == dc and sr == dr
     got = {(r["lat_src"], r["lon_src"]): (r["lat_dst"], r["lon_dst"])
            for r in out.collect()}
@@ -64,7 +65,7 @@ def test_shift_magnitude_over_gb():
 def test_plan_no_udf_no_exchange(spark):
     df = spark.range(100).selectExpr(
         "50.0 + id * 0.01 AS lat_src", "-5.0 + id * 0.01 AS lon_src")
-    out = D.with_datum_shift(df)
+    out = with_stages(df, D.datum_stages())
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Python" not in plan and "ArrowEval" not in plan

@@ -153,6 +153,23 @@ def test_missing_coordinates_stay_null(spark, duck):
     assert pip.pip_join_raycast(g, ring).count() == 0
 
 
+def test_tile_y_at_the_poles(spark, duck):
+    """Both poles land in their edge rows in both engines (at the south
+    pole tan is exactly 0: Spark's ln gave NULL, so row 0, and DuckDB's
+    raised), and a missing latitude stays NULL."""
+    lats = [-90.0, -89.999, 90.0, None]
+    want = [63, 63, 0, None]
+    expr = geo.sql_tile_y("lat", 6)
+    df = spark.createDataFrame(list(enumerate(lats)), "i int, lat double")
+    assert [r[0] for r in df.orderBy("i").selectExpr(expr).collect()] == want
+    values = ", ".join(f"({i}, {'NULL' if la is None else la})"
+                       for i, la in enumerate(lats))
+    assert [r[0] for r in duck.execute(
+        f"SELECT {expr} FROM (SELECT i, cast(lat as double) AS lat"
+        f" FROM (VALUES {values}) AS t(i, lat)) ORDER BY i").fetchall()] \
+        == want
+
+
 _EDGES = [(lo, la) for lo in (-180_001, -180_000, -1, 0, 1, 179_999,
                               180_000, 180_001)
           for la in (-90_001, -90_000, -1, 0, 89_999, 90_000, 90_001)]

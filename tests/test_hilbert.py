@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from geotiff_processor_spark.functions import hilbert as H
+from geotiff_processor_spark.functions.stages import sql_stages, with_stages
 from geotiff_processor_spark.testing import duck_norm, spark_norm
 
 
@@ -43,13 +44,13 @@ def test_spark_equals_duckdb_equals_numpy(spark):
     pts = [(int(x), int(y)) for x, y in
            zip(rng.randint(0, 256, 500), rng.randint(0, 256, 500))]
     df = spark.createDataFrame(pts, "xq bigint, yq bigint")
-    out = H.with_hilbert(df, "xq", "yq", level=8)
+    out = with_stages(df, H.hilbert_stages("xq", "yq", level=8))
     sc, sr = spark_norm(out)
     con = duckdb.connect()
     con.sql("CREATE TABLE pts (xq BIGINT, yq BIGINT)")
     con.executemany("INSERT INTO pts VALUES (?, ?)", pts)
-    dc, dr = duck_norm(con, H.sql_hilbert_chain(
-        "SELECT xq, yq FROM pts", "xq", "yq", 8))
+    dc, dr = duck_norm(con, sql_stages(
+        "SELECT xq, yq FROM pts", H.hilbert_stages("xq", "yq", 8)))
     assert sc == dc and sr == dr
     got = {(r["xq"], r["yq"]): r["hilbert_d"] for r in out.collect()}
     assert all(got[p] == H.hilbert_d_scalar(p[0], p[1], 8) for p in pts)
@@ -61,7 +62,7 @@ def test_plan_no_udf_no_exchange(spark):
     (no janino fallback means the CASE chain is within limits)."""
     df = spark.range(1000).selectExpr(
         "id % 256 AS xq", "cast(id / 256 as bigint) AS yq")
-    out = H.with_hilbert(df, "xq", "yq", level=8)
+    out = with_stages(df, H.hilbert_stages("xq", "yq", level=8))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Python" not in plan and "ArrowEval" not in plan
@@ -73,7 +74,7 @@ def test_block_span_bound(spark):
     contiguity claim the query exposes."""
     df = spark.range(4096).selectExpr(
         "cast(id % 64 as bigint) AS xq", "cast(id / 64 as bigint) AS yq")
-    out = H.with_hilbert(df, "xq", "yq", level=6)
+    out = with_stages(df, H.hilbert_stages("xq", "yq", level=6))
     import pyspark.sql.functions as F
     spans = (out.groupBy(F.expr("cast(floor(hilbert_d / 64) as bigint)")
                          .alias("b"))
@@ -100,11 +101,11 @@ def test_ranges_pred_equals_direct_bbox(spark):
     the direct xq/yq bbox predicate selects — the cover is exact, not
     approximate."""
     from geotiff_processor_spark.functions.hilbert import (
-        bbox_ranges, filter_by_ranges, with_hilbert)
+        bbox_ranges, filter_by_ranges)
     df = spark.range(20000).selectExpr(
         "id AS rid", "cast(id % 256 as bigint) AS xq",
         "cast((id * 7919) % 256 as bigint) AS yq")
-    hd = with_hilbert(df, "xq", "yq", level=8)
+    hd = with_stages(df, H.hilbert_stages("xq", "yq", level=8))
     pruned = filter_by_ranges(hd, bbox_ranges(100, 131, 60, 91, 8))
     via_ranges = {r["rid"] for r in pruned.collect()}
     direct = {r["rid"] for r in df.filter(
@@ -127,7 +128,7 @@ def test_persisted_sorted_scan_prunes_row_groups(spark, tmp_path):
     df = spark.range(n).selectExpr(
         "id AS rid", "cast(id % 256 as bigint) AS xq",
         "cast((id * 7919) % 256 as bigint) AS yq")
-    hd = H.with_hilbert(df, "xq", "yq", level=8)
+    hd = with_stages(df, H.hilbert_stages("xq", "yq", level=8))
     path = str(tmp_path / "hilbert_sorted")
     (hd.repartitionByRange(16, F.col("hilbert_d"))
        .sortWithinPartitions("hilbert_d")

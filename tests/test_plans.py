@@ -6,7 +6,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from geotiff_processor_spark.operators import dedup, graph, pip, tiling
+from geotiff_processor_spark.operators import dedup, graph, knn, pip, tiling
 from geotiff_processor_spark.sources import synth
 
 
@@ -102,16 +102,19 @@ def test_general_pip_predicate_in_codegen(spark, sf_dir):
 
 
 def test_pip_paths_parse_each_coordinate_once(spark, sf_dir):
-    """The cover join leaves the optimizer no null-intolerant predicate
-    on a pages column, so no inferred isnotnull Filter is pushed below
-    geocode to repeat its text parse: the optimized plan parses ``loc=``
-    once per coordinate, and no Filter tests the text."""
+    """The cover join (and the radius join's band join) leaves the
+    optimizer no null-intolerant predicate on a pages column, so no
+    inferred isnotnull Filter is pushed below geocode to repeat its text
+    parse: the optimized plan parses ``loc=`` once per coordinate, and
+    no Filter tests the text."""
     pages = _staged_pages(spark, sf_dir)
     g = synth.geocode(pages)
     polys = synth.general_polygon_rows()
+    queries = synth.build_knn_queries(spark)
     for name, df in (("flagship", tiling.flagship_pipeline(pages)),
                      ("general", pip.pip_join_general(g, polys)),
-                     ("raycast", pip.pip_join_raycast(g, polys))):
+                     ("raycast", pip.pip_join_raycast(g, polys)),
+                     ("radius", knn.radius_join(g, queries, 400_000.0))):
         opt = df._jdf.queryExecution().optimizedPlan().toString()
         assert opt.count("loc=") == 2, (name, opt)
         filters = re.findall(r"[+:-] Filter .*", opt)

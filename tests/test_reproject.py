@@ -1,7 +1,9 @@
-"""UTM inverse transverse Mercator: round-trip, UDF/native/oracle parity.
+"""CRS inverses: numpy round-trips, Spark native vs numpy parity, plan
+shape and EPSG dispatch. Spark vs DuckDB parity of every stage list is
+in tests/test_stages.py.
 
-Reference analog: arbitrary-EPSG ingest + EPSG:3857 warp
-(/root/reference/helpers.py:45-48, export_formats/geoserverDEM.py:34-38).
+Reference analog: arbitrary-EPSG ingest + EPSG:3857 warp (the
+reference's helpers.py:45-48, export_formats/geoserverDEM.py:34-38).
 """
 
 import numpy as np
@@ -9,6 +11,7 @@ from pyspark.sql import functions as F
 
 from geotiff_processor_spark.functions import geo
 from geotiff_processor_spark.functions import reproject as R
+from geotiff_processor_spark.functions.stages import with_stages
 
 ZONE = 21
 
@@ -37,55 +40,14 @@ def test_spark_native_matches_numpy(spark):
     e, n = R.np_utm_forward(lon, lat, ZONE, south=True)
     df = spark.createDataFrame(
         [(float(a), float(b)) for a, b in zip(e, n)], "e_utm double, n_utm double")
-    out = R.reproject_utm(df, "e_utm", "n_utm", ZONE, south=True,
-                          round_digits=9)
+    out = with_stages(df, R.utm_stages("e_utm", "n_utm", ZONE, south=True,
+                                       round_digits=9))
     got = out.orderBy("e_utm", "n_utm").toPandas()
     ref_lon, ref_lat = R.np_utm_inverse(
         got.e_utm.to_numpy(), got.n_utm.to_numpy(), ZONE, south=True)
     # JVM vs numpy libm: last-ulp transcendental differences only
     assert np.abs(got.lon.to_numpy() - ref_lon).max() < 1e-9
     assert np.abs(got.lat.to_numpy() - ref_lat).max() < 1e-9
-
-
-def test_spark_matches_duckdb_cte(spark, duck):
-    """The exact oracle contract: identical rounded values, both engines
-    running the same expression text."""
-    q = f"""WITH u0 AS (
-  SELECT i, cast({R.SQL_UTM_EASTING} as double) AS e_utm,
-         cast({R.SQL_UTM_NORTHING} as double) AS n_utm
-  FROM (SELECT unnest(range(0, 3000)) AS i)
-),
-{R.utm_inverse_cte('u0', ['i'])}
-SELECT i, lon, lat FROM utm_ll ORDER BY i"""
-    oracle = duck.execute(q).df()
-
-    src = spark.range(3000).select(
-        F.col("id").alias("i"),
-        F.expr(f"cast({R.SQL_UTM_EASTING} as double)").alias("e_utm"),
-        F.expr(f"cast({R.SQL_UTM_NORTHING} as double)").alias("n_utm"),
-    )
-    got = (R.reproject_utm(src, "e_utm", "n_utm", ZONE, south=True)
-           .orderBy("i").toPandas())
-    assert (got.lon.to_numpy() == oracle.lon.to_numpy()).all()
-    assert (got.lat.to_numpy() == oracle.lat.to_numpy()).all()
-
-
-def test_pandas_udf_matches_native(spark):
-    lon, lat = _grid()
-    e, n = R.np_utm_forward(lon, lat, ZONE, south=True)
-    df = spark.createDataFrame(
-        [(float(a), float(b)) for a, b in zip(e, n)],
-        "e_utm double, n_utm double")
-    udf = R.make_utm_inverse_pandas_udf(ZONE, south=True, round_digits=6)
-    both = (
-        R.reproject_utm(df, "e_utm", "n_utm", ZONE, south=True)
-        .withColumn("u", udf(F.col("e_utm"), F.col("n_utm")))
-    )
-    bad = both.filter(
-        (F.abs(F.col("lon") - F.col("u.lon")) > 1e-6)
-        | (F.abs(F.col("lat") - F.col("u.lat")) > 1e-6)
-    ).count()
-    assert bad == 0
 
 
 def test_chain_into_mercator_matches_direct(spark):
@@ -97,8 +59,8 @@ def test_chain_into_mercator_matches_direct(spark):
         [(float(a), float(b), float(c), float(d))
          for a, b, c, d in zip(e, n, lon, lat)],
         "e_utm double, n_utm double, lon_true double, lat_true double")
-    out = R.reproject_utm(df, "e_utm", "n_utm", ZONE, south=True,
-                          round_digits=9)
+    out = with_stages(df, R.utm_stages("e_utm", "n_utm", ZONE, south=True,
+                                       round_digits=9))
     mx, my = geo.mercator_xy("lon", "lat")
     tx, ty = geo.mercator_xy("lon_true", "lat_true")
     bad = (
@@ -119,7 +81,7 @@ def test_plan_is_single_codegen_projection(spark):
         F.expr(f"cast({R.SQL_UTM_EASTING} as double)").alias("e_utm"),
         F.expr(f"cast({R.SQL_UTM_NORTHING} as double)").alias("n_utm"),
     )
-    plan = (R.reproject_utm(src, "e_utm", "n_utm")
+    plan = (with_stages(src, R.utm_stages("e_utm", "n_utm"))
             ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -157,34 +119,12 @@ def test_lcc_spark_native_matches_numpy(spark):
     df = spark.createDataFrame(
         [(float(a), float(b)) for a, b in zip(x, y)],
         "x_lcc double, y_lcc double")
-    got = (R.reproject_lcc(df, "x_lcc", "y_lcc", round_digits=9)
+    got = (with_stages(df, R.lcc_stages("x_lcc", "y_lcc", round_digits=9))
            .orderBy("x_lcc", "y_lcc").toPandas())
     ref_lon, ref_lat = R.np_lcc_inverse(
         got.x_lcc.to_numpy(), got.y_lcc.to_numpy())
     assert np.abs(got.lon.to_numpy() - ref_lon).max() < 1e-9
     assert np.abs(got.lat.to_numpy() - ref_lat).max() < 1e-9
-
-
-def test_lcc_spark_matches_duckdb_cte(spark, duck):
-    """Oracle contract: identical rounded values from the identical
-    expression text in both engines."""
-    q = f"""WITH l0 AS (
-  SELECT i, cast({R.SQL_LCC_X} as double) AS x_lcc,
-         cast({R.SQL_LCC_Y} as double) AS y_lcc
-  FROM (SELECT unnest(range(0, 3000)) AS i)
-),
-{R.lcc_inverse_cte('l0', ['i'])}
-SELECT i, lon, lat FROM lcc_ll ORDER BY i"""
-    oracle = duck.execute(q).df()
-
-    src = spark.range(3000).select(
-        F.col("id").alias("i"),
-        F.expr(f"cast({R.SQL_LCC_X} as double)").alias("x_lcc"),
-        F.expr(f"cast({R.SQL_LCC_Y} as double)").alias("y_lcc"),
-    )
-    got = R.reproject_lcc(src, "x_lcc", "y_lcc").orderBy("i").toPandas()
-    assert (got.lon.to_numpy() == oracle.lon.to_numpy()).all()
-    assert (got.lat.to_numpy() == oracle.lat.to_numpy()).all()
 
 
 def test_lcc_plan_is_single_codegen_projection(spark):
@@ -193,7 +133,7 @@ def test_lcc_plan_is_single_codegen_projection(spark):
         F.expr(f"cast({R.SQL_LCC_X} as double)").alias("x_lcc"),
         F.expr(f"cast({R.SQL_LCC_Y} as double)").alias("y_lcc"),
     )
-    plan = (R.reproject_lcc(src, "x_lcc", "y_lcc")
+    plan = (with_stages(src, R.lcc_stages("x_lcc", "y_lcc"))
             ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -240,32 +180,12 @@ def test_ps_spark_native_matches_numpy(spark):
     df = spark.createDataFrame(
         [(float(a), float(b)) for a, b in zip(x, y)],
         "x_ps double, y_ps double")
-    got = (R.reproject_ps(df, "x_ps", "y_ps", round_digits=9)
+    got = (with_stages(df, R.ps_stages("x_ps", "y_ps", round_digits=9))
            .orderBy("x_ps", "y_ps").toPandas())
     ref_lon, ref_lat = R.np_ps_inverse(
         got.x_ps.to_numpy(), got.y_ps.to_numpy())
     assert np.abs(got.lon.to_numpy() - ref_lon).max() < 1e-9
     assert np.abs(got.lat.to_numpy() - ref_lat).max() < 1e-9
-
-
-def test_ps_spark_matches_duckdb_cte(spark, duck):
-    q = f"""WITH s0 AS (
-  SELECT i, cast({R.SQL_PS_X} as double) AS x_ps,
-         cast({R.SQL_PS_Y} as double) AS y_ps
-  FROM (SELECT unnest(range(0, 3000)) AS i)
-),
-{R.ps_inverse_cte('s0', ['i'])}
-SELECT i, lon, lat FROM ps_ll ORDER BY i"""
-    oracle = duck.execute(q).df()
-
-    src = spark.range(3000).select(
-        F.col("id").alias("i"),
-        F.expr(f"cast({R.SQL_PS_X} as double)").alias("x_ps"),
-        F.expr(f"cast({R.SQL_PS_Y} as double)").alias("y_ps"),
-    )
-    got = R.reproject_ps(src, "x_ps", "y_ps").orderBy("i").toPandas()
-    assert (got.lon.to_numpy() == oracle.lon.to_numpy()).all()
-    assert (got.lat.to_numpy() == oracle.lat.to_numpy()).all()
 
 
 def test_ps_synth_coords_never_hit_pole():
@@ -288,7 +208,7 @@ def test_epsg_dispatch_utm_south(spark):
         F.expr(f"cast({R.SQL_UTM_NORTHING} as double)").alias("n"),
     )
     via_epsg = R.reproject_epsg(src, 32721, "e", "n").orderBy("i").collect()
-    direct = R.reproject_utm(src, "e", "n", zone=21, south=True) \
+    direct = with_stages(src, R.utm_stages("e", "n", zone=21, south=True)) \
         .orderBy("i").collect()
     assert [(r.lon, r.lat) for r in via_epsg] == \
            [(r.lon, r.lat) for r in direct]
@@ -302,7 +222,8 @@ def test_epsg_dispatch_ps(spark):
     )
     via_epsg = R.reproject_epsg(src, 3031, "x_ps", "y_ps") \
         .orderBy("i").collect()
-    direct = R.reproject_ps(src, "x_ps", "y_ps").orderBy("i").collect()
+    direct = with_stages(src, R.ps_stages("x_ps", "y_ps")) \
+        .orderBy("i").collect()
     assert [(r.lon, r.lat) for r in via_epsg] == \
            [(r.lon, r.lat) for r in direct]
 
@@ -323,10 +244,12 @@ def test_epsg_dispatch_unknown_without_pyproj(spark):
         pass
     src = spark.createDataFrame([(0.0, 0.0)], "x double, y double")
     import pytest as _pytest
-    with _pytest.raises(NotImplementedError, match="pyproj"):
+    with _pytest.raises(NotImplementedError, match="pyproj") as err:
         # British National Grid: transverse Mercator on the AIRY
         # ellipsoid — genuinely outside the WGS84-series native families
         R.reproject_epsg(src, 27700, "x", "y")
+    # the message lists the native codes from the dispatch table
+    assert "3857" in str(err.value) and "5070" in str(err.value)
 
 
 def test_epsg_dispatch_3857_roundtrip(spark):
@@ -406,38 +329,16 @@ def test_epsg_dispatch_gda94_matches_grs80_direct(spark):
     )
     via_epsg = R.reproject_epsg(src, 28355, "e", "n") \
         .orderBy("i").collect()
-    direct = R.reproject_utm(src, "e", "n", zone=55, south=True,
-                             ell=R.GRS80_ELL).orderBy("i").collect()
+    direct = with_stages(src, R.utm_stages(
+        "e", "n", zone=55, south=True, ell=R.GRS80_ELL)).orderBy("i").collect()
     assert [(r.lon, r.lat) for r in via_epsg] == \
            [(r.lon, r.lat) for r in direct]
     # ED50 dispatch reaches the International 1924 constants: same
     # coords, zone 30 north, must differ from the WGS84 answer
     ed50 = R.reproject_epsg(src, 23030, "e", "n").orderBy("i").collect()
-    wgs = R.reproject_utm(src, "e", "n", zone=30, south=False) \
+    wgs = with_stages(src, R.utm_stages("e", "n", zone=30, south=False)) \
         .orderBy("i").collect()
     assert all(abs(a.lat - b.lat) > 1e-5 for a, b in zip(ed50, wgs))
-
-
-def test_grs80_spark_matches_duckdb_cte(spark, duck):
-    """The GDA94 oracle text (GRS80 constants inlined) agrees with the
-    Spark native path row-for-row — the reproject_gda94 contract."""
-    lon, lat = _grid()
-    e, n = R.np_utm_forward(lon + 200.0, lat, 55, south=True,
-                            ell=R.GRS80_ELL)
-    rows = [(int(i), float(a), float(b))
-            for i, (a, b) in enumerate(zip(e, n))]
-    df = spark.createDataFrame(rows, "i long, e_utm double, n_utm double")
-    got = {r["i"]: (r["lon"], r["lat"]) for r in
-           R.reproject_utm(df, "e_utm", "n_utm", zone=55, south=True,
-                           ell=R.GRS80_ELL).collect()}
-    duck.execute("CREATE OR REPLACE TABLE g80 (i bigint, e_utm double,"
-                 " n_utm double)")
-    duck.executemany("INSERT INTO g80 VALUES (?, ?, ?)", rows)
-    cte = R.utm_inverse_cte("g80", ["i"], zone=55, south=True,
-                            ell=R.GRS80_ELL)
-    for i, lo, la in duck.execute(
-            f"WITH {cte} SELECT i, lon, lat FROM utm_ll").fetchall():
-        assert got[i] == (lo, la), i
 
 
 def test_albers_roundtrip_independent_forward(spark):
@@ -455,7 +356,7 @@ def test_albers_roundtrip_independent_forward(spark):
         [(int(i), float(x[i]), float(y[i])) for i in range(len(lon))],
         "i int, x_alb double, y_alb double")
     out = {r["i"]: (r["lon"], r["lat"]) for r in
-           R.reproject_albers(df, round_digits=9).collect()}
+           with_stages(df, R.albers_stages(round_digits=9)).collect()}
     for i in range(len(lon)):
         assert abs(out[i][0] - lon[i]) < 1e-7, i
         assert abs(out[i][1] - lat[i]) < 1e-7, i
